@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tools.explain_audit import unpartitioned_windows
 from turtle_spark.operators.layout import (
     exact_rank,
     pruning_report,
@@ -14,16 +15,24 @@ from turtle_spark.operators.layout import (
 
 
 def _unpartitioned_windows(df) -> list[str]:
-    """windowspecdefinition(...) occurrences in the optimized plan
-    whose FIRST argument is a sort order (i.e. the partition-column
-    list is empty — the single-partition WindowExec scale-killer)."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    bad = []
-    for chunk in plan.split("windowspecdefinition(")[1:]:
-        head = chunk.split(",", 1)[0]
-        if " ASC" in head or " DESC" in head:
-            bad.append(head)
-    return bad
+    """Single-partition window specs in the optimized plan."""
+    return unpartitioned_windows(df._jdf.queryExecution().optimizedPlan().toString())
+
+
+def test_unpartitioned_window_detector_balances_parens():
+    # a sort key that is a call: its inner comma is not the end of the
+    # (empty) partition list
+    plan = (
+        "Window [row_number() windowspecdefinition(pmod(h#5L, 1) ASC NULLS FIRST, "
+        "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS rn#9]"
+    )
+    assert unpartitioned_windows(plan) == ["pmod(h#5L, 1) ASC NULLS FIRST"]
+    # partitioned by a call, ordered: not a global window
+    plan = (
+        "Window [rank() windowspecdefinition(pmod(h#5L, 1), x#3 DESC NULLS LAST, "
+        "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())) AS r#10]"
+    )
+    assert unpartitioned_windows(plan) == []
 
 
 def _morton_py(a: int, b: int) -> int:

@@ -94,12 +94,13 @@ def test_entry_smoke(spark):
 
 
 def test_golden_xxh64_matches_spark(spark):
-    """tools.golden_ref.xxh64_str must be byte-compatible with Spark's
+    """functions.hashing.xxh64_str must be byte-compatible with Spark's
     xxhash64 on strings — every golden oracle that replicates an
-    engine-side xxhash64 key depends on it."""
+    engine-side xxhash64 key, and read_subject's driver-side bucket,
+    depend on it."""
     from pyspark.sql import functions as F
 
-    from tools.golden_ref import xxh64_str
+    from turtle_spark.functions.hashing import xxh64_str
 
     samples = [
         "", "a", "doc-000000000", "media://doc-000000017/1", "17",

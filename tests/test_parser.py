@@ -139,8 +139,9 @@ def test_parse_memo_is_observably_identical() -> None:
 
 
 def test_parse_memo_cache_caps_hold() -> None:
-    """The shared memo's bounds are enforced: >=512 contexts reset the
-    outer map, and an over-cap inner cache cycles instead of growing."""
+    """The shared memo's bounds are enforced: the outer map holds at
+    most 512 contexts, and an over-cap inner cache cycles instead of
+    growing."""
     from turtle_spark.core import parser as P
 
     memo: dict = {}
@@ -161,3 +162,33 @@ def test_parse_memo_cache_caps_hold() -> None:
         assert len(inner) <= 8
     finally:
         P._SAN_CACHE_CAP = old_cap
+
+
+def test_parse_memo_evicts_one_cold_context() -> None:
+    """The 513th context evicts one cold context, not the whole memo: a
+    context in use survives with its cache, and parse output stays
+    bit-identical to parsing without a memo."""
+    from turtle_spark.core import parser as P
+
+    def ctx(ns: str) -> tuple:
+        return ("", frozenset({("e", ns)}))
+
+    memo: dict = {}
+    hot = P._memo_view(memo, "", {"e": "http://hot/"})
+    for i in range(P._MEMO_CONTEXTS - 1):
+        P._memo_view(memo, "", {"e": f"http://cold{i}/"})
+        assert P._memo_view(memo, "", {"e": "http://hot/"}) is hot
+    assert len(memo) == P._MEMO_CONTEXTS
+    P._memo_view(memo, "", {"e": "http://new/"})  # the 513th context
+    assert len(memo) == P._MEMO_CONTEXTS
+    assert memo[ctx("http://hot/")] is hot
+    assert ctx("http://cold0/") not in memo
+    assert ctx("http://cold1/") in memo and ctx("http://new/") in memo
+
+    # the same through parse_document, past the cap
+    hot_doc = '@prefix e: <http://hot/> . e:s e:p "v" . e:s e:q e:o .'
+    for i in range(P._MEMO_CONTEXTS + 8):
+        for doc in (hot_doc, f'@prefix e: <http://c{i}/> . e:s e:p "v{i}" .'):
+            assert parse_document(doc, san_memo=memo) == parse_document(doc)
+    assert len(memo) == P._MEMO_CONTEXTS
+    assert memo[ctx("http://hot/")] is hot and hot

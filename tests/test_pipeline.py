@@ -12,7 +12,12 @@ from turtle_spark.operators.serialize import subject_blocks, turtle_text
 from turtle_spark.plans.manifest import StageManifest, dataframe_fingerprint
 from turtle_spark.plans.pipeline import run_pipeline
 from turtle_spark.sources.corpus import generate_docs
-from turtle_spark.sources.storage import read_subject, write_triples
+from turtle_spark.sources.storage import bucket_of, read_subject, write_triples
+
+_TRIPLE_DDL = (
+    "doc_id string, seq long, subject string, predicate string, object string, "
+    "label string, datatype string, objecttype string"
+)
 
 
 def test_pipeline_end_to_end_and_resume(spark, tmp_path):
@@ -85,6 +90,74 @@ def test_bucketed_storage_prunes(spark, tmp_path):
     plan = hit._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan and "bucket" in plan
 
+
+def _write_subjects(spark, path: str, subjects: list[str], n_buckets: int) -> None:
+    """Two triples per subject: the table ``read_subject`` reads."""
+    rows = [
+        ("d", 2 * i + j, s, f"http://e/p{j}", f"o{i}", "", "", "literal")
+        for i, s in enumerate(subjects)
+        for j in range(2)
+    ]
+    write_triples(spark.createDataFrame(rows, _TRIPLE_DDL), path, n_buckets=n_buckets)
+
+
+def test_read_subject_equals_full_scan(spark, tmp_path):
+    subjects = [f"http://e/s{i}" for i in range(24)] + [
+        "http://e/Человек-паук", 'http://e/say "hi"', "_:b0", "",
+    ]
+    path = str(tmp_path / "triples")
+    _write_subjects(spark, path, subjects, n_buckets=8)
+    full = spark.read.parquet(path)
+    by_subject: dict[str, list] = {}
+    for r in full.collect():
+        by_subject.setdefault(r.subject, []).append(r)
+    for s in subjects:
+        hit = read_subject(spark, path, s, n_buckets=8)
+        assert hit.schema == full.schema, s
+        got = hit.collect()
+        assert {r.bucket for r in got} == {bucket_of(s, 8)}, s
+        assert sorted(got) == sorted(by_subject[s]), s
+
+
+def test_read_subject_absent_subject_is_empty(spark, tmp_path):
+    subjects = [f"http://e/s{i}" for i in range(3)]
+    path = str(tmp_path / "triples")
+    _write_subjects(spark, path, subjects, n_buckets=8)
+    full_schema = spark.read.parquet(path).schema
+    filled = {bucket_of(s, 8) for s in subjects}
+    absent = [f"http://e/absent{i}" for i in range(64)]
+    in_empty = next(s for s in absent if bucket_of(s, 8) not in filled)
+    in_filled = next(s for s in absent if bucket_of(s, 8) in filled)
+    assert not pathlib.Path(path, f"bucket={bucket_of(in_empty, 8)}").exists()
+    # a URI path takes the inferred-schema, Hadoop-FS branch
+    for table in (path, f"file://{path}"):
+        for s in (in_empty, in_filled):
+            hit = read_subject(spark, table, s, n_buckets=8)
+            assert hit.schema == full_schema, (table, s)
+            assert hit.collect() == [], (table, s)
+        hit = read_subject(spark, table, subjects[0], n_buckets=8)
+        assert sorted(r.predicate for r in hit.collect()) == ["http://e/p0", "http://e/p1"]
+
+
+def test_read_subject_runs_one_spark_job(spark, tmp_path):
+    """More bucket directories than Spark's parallel-listing threshold
+    (32): listing the table root, or inferring its schema, would each
+    add a job before the lookup's own."""
+    subjects = [f"http://e/s{i}" for i in range(400)]
+    path = str(tmp_path / "triples")
+    _write_subjects(spark, path, subjects, n_buckets=64)
+    assert len(list(pathlib.Path(path).glob("bucket=*"))) > 32
+    sc = spark.sparkContext
+    group = f"read-subject-{tmp_path.name}"
+    sc.setJobGroup(group, "one point lookup")
+    try:
+        rows = read_subject(spark, path, "http://e/s7").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sorted(r.object for r in rows) == ["o7", "o7"]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 def test_subject_blocks_match_core_serializer(spark):
     triples = spark.createDataFrame(

@@ -165,6 +165,29 @@ def plan_of(df) -> str:
     )
 
 
+def _first_arg(args: str) -> str:
+    """The first argument of a call, given the text after its opening
+    parenthesis: up to the first comma or close paren at depth 0."""
+    depth = 0
+    for i, ch in enumerate(args):
+        if ch == "(":
+            depth += 1
+        elif depth == 0 and ch in ",)":
+            return args[:i]
+        elif ch == ")":
+            depth -= 1
+    return args
+
+
+def unpartitioned_windows(plan: str) -> list[str]:
+    """Single-partition windows: ``windowspecdefinition(...)`` whose
+    FIRST argument is already a sort order has an EMPTY partition list —
+    the WindowExec scale-killer this repo bans (layout.py exact_rank
+    exists so no query needs one).  Returns those first arguments."""
+    heads = (_first_arg(c) for c in plan.split("windowspecdefinition(")[1:])
+    return [h for h in heads if " ASC" in h or " DESC" in h]
+
+
 def audit(name: str, plan: str) -> list[str]:
     notes = []
     # count operators by their numbered detail headers "(N) OpName" so
@@ -178,15 +201,7 @@ def audit(name: str, plan: str) -> list[str]:
     pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
     pushed_nonempty = [p for p in pushed if p.strip()]
     schemas = re.findall(r"ReadSchema: struct<([^>]*)>", plan)
-    # single-partition windows: windowspecdefinition(...) whose FIRST
-    # argument is already a sort order means an EMPTY partition list —
-    # the WindowExec scale-killer this repo bans (layout.py exact_rank
-    # exists so no query needs one)
-    n_global_windows = 0
-    for chunk in plan.split("windowspecdefinition(")[1:]:
-        head = chunk.split(",", 1)[0]
-        if " ASC" in head or " DESC" in head:
-            n_global_windows += 1
+    n_global_windows = len(unpartitioned_windows(plan))
     # NOTE: whole-stage-codegen ids are assigned after AQE finalizes at
     # runtime, so they don't appear in the pre-execution formatted plan;
     # Python/Arrow operator count is the static stand-in ("0" = the

@@ -65,6 +65,10 @@ class ParseResult:
     prefixes: dict[str, str] = field(default_factory=dict)
 
 
+# distinct (base, prefixes) contexts one shared memo keeps
+_MEMO_CONTEXTS = 512
+
+
 def _memo_view(
     memo: dict, base: str, prefixes: dict[str, str]
 ) -> dict[str, tuple[str, str, str, str]]:
@@ -74,13 +78,16 @@ def _memo_view(
     results identical to uncached parsing; documents redeclaring the
     same vocabulary (the overwhelmingly common case in a real corpus)
     land in the same inner cache and skip re-sanitizing every recurring
-    term.  The outer guard bounds pathological many-context corpora."""
+    term.  The outer map is an LRU of ``_MEMO_CONTEXTS`` contexts (dict
+    order is recency): a many-context corpus evicts the least recently
+    used context, and the contexts documents keep using stay warm."""
     key = (base, frozenset(prefixes.items()))
-    cache = memo.get(key)
+    cache = memo.pop(key, None)
     if cache is None:
-        if len(memo) >= 512:
-            memo.clear()
-        cache = memo[key] = {}
+        if len(memo) >= _MEMO_CONTEXTS:
+            del memo[next(iter(memo))]
+        cache = {}
+    memo[key] = cache
     return cache
 
 

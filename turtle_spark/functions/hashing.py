@@ -6,10 +6,14 @@ salted per process — and (b) vectorized: one numpy pass per document,
 one Python loop level per *batch*, never per row of anything hot.
 
 Used by: MinHash-LSH entity linking/near-dup (SURVEY.md §2.2 joins),
-SimHash dedup, document fingerprinting.
+SimHash dedup, document fingerprinting.  ``xxh64_str`` is the
+driver-side twin of Spark's ``xxhash64``: bucket arithmetic for point
+lookups (``sources/storage.py``) and the golden oracles' key hashing.
 """
 
 from __future__ import annotations
+
+import struct
 
 import numpy as np
 
@@ -39,15 +43,6 @@ def char_shingle_hashes(text: str, k: int = 5) -> np.ndarray:
     windows = np.lib.stride_tricks.sliding_window_view(data, k).astype(np.uint64)
     hashes = (windows * powers).sum(axis=1)  # wraps mod 2^64, deterministic
     return np.unique(hashes)
-
-
-def word_shingle_hashes(text: str, n: int = 3) -> np.ndarray:
-    """Distinct hashes of word n-grams (whitespace tokenization)."""
-    words = text.split()
-    if len(words) < n:
-        return np.empty(0, dtype=np.uint64)
-    grams = [" ".join(words[i : i + n]) for i in range(len(words) - n + 1)]
-    return np.unique(np.array([stable_str_hash(g) for g in grams], dtype=np.uint64))
 
 
 def stable_str_hash(s: str) -> int:
@@ -370,3 +365,77 @@ def rolling_fingerprint(text: str, window: int = 64) -> int:
         # column on the (empty-document) edge
         return stable_str_hash(text) & 0x7FFFFFFFFFFFFFFF
     return int(h.min() & np.uint64(0x7FFFFFFFFFFFFFFF))
+
+
+# --------------------------------------------------------------------------
+# XXH64 (public spec, seed 42 = Spark's xxhash64) — scalar, for driver-side
+# keys; byte-compatible with ``F.xxhash64`` on strings (pinned by pytest)
+# --------------------------------------------------------------------------
+
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_M64 = 0xFFFFFFFFFFFFFFFF
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round64(acc: int, inp: int) -> int:
+    acc = (acc + inp * _P2) & _M64
+    return (_rotl(acc, 31) * _P1) & _M64
+
+
+def _merge_round(acc: int, val: int) -> int:
+    acc ^= _round64(0, val)
+    return (acc * _P1 + _P4) & _M64
+
+
+def xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 over ``data``; returns Spark's signed-int64 value."""
+    n = len(data)
+    pos = 0
+    if n >= 32:
+        v1 = (seed + _P1 + _P2) & _M64
+        v2 = (seed + _P2) & _M64
+        v3 = seed & _M64
+        v4 = (seed - _P1) & _M64
+        while pos + 32 <= n:
+            a, b, c, d = struct.unpack_from("<QQQQ", data, pos)
+            v1, v2, v3, v4 = (
+                _round64(v1, a), _round64(v2, b), _round64(v3, c), _round64(v4, d)
+            )
+            pos += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h = _merge_round(h, v)
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while pos + 8 <= n:
+        (k1,) = struct.unpack_from("<Q", data, pos)
+        h ^= _round64(0, k1)
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        pos += 8
+    if pos + 4 <= n:
+        (k1,) = struct.unpack_from("<I", data, pos)
+        h ^= (k1 * _P1) & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        pos += 4
+    while pos < n:
+        h ^= (data[pos] * _P5) & _M64
+        h = (_rotl(h, 11) * _P1) & _M64
+        pos += 1
+    h ^= h >> 33
+    h = (h * _P2) & _M64
+    h ^= h >> 29
+    h = (h * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >= (1 << 63) else h
+
+
+def xxh64_str(s: str, seed: int = 42) -> int:
+    return xxh64(s.encode("utf-8"), seed)

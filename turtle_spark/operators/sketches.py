@@ -20,7 +20,7 @@ associatively-mergeable state:
 Determinism contract (the repo-wide rule: every operator must be
 bit-identical at any parallelism, or it can never hash-match its own
 oracle): all hashing is Spark's built-in ``xxhash64`` (JVM-side,
-seed 42 — replicated byte-exactly by ``tools/golden_ref.xxh64_str``),
+seed 42 — replicated byte-exactly by ``functions.hashing.xxh64_str``),
 register/min-k/counter merges are max/min/sum in INTEGER domain, and
 the only floating-point arithmetic is a closed-form estimate computed
 once per group from exact integer aggregates, rounded to 4 decimals.

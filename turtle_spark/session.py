@@ -17,6 +17,25 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: driver heap ceiling; the size the extraction stage was tuned at on
+#: local[32], where 8g measured a 5x GC slowdown
+MAX_DRIVER_MEM_GB = 24
+
+
+def mem_total_kb() -> int:
+    """Physical memory, from ``/proc/meminfo``."""
+    with open("/proc/meminfo") as f:
+        return next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+
+
+def default_driver_memory() -> str:
+    """About half of physical memory, in whole GiB, capped at
+    ``MAX_DRIVER_MEM_GB``.  In local mode the driver JVM is the whole
+    engine and shares the host with its Python workers, so a heap sized
+    past RAM gets the JVM OOM-killed mid-run instead of spilling."""
+    half_gb = mem_total_kb() // (2 * 1024 * 1024)
+    return f"{min(max(1, half_gb), MAX_DRIVER_MEM_GB)}g"
+
 
 def get_spark(
     app_name: str = "turtle-spark",
@@ -57,10 +76,13 @@ def get_spark(
         # extraction stage).  On a cluster with HDFS-style locality,
         # raise this back via extra_conf.
         .config("spark.locality.wait", "0s")
-        # sized for local[32]: 32 concurrent tasks allocate fast; an
-        # undersized heap turns the extraction stage into a GC storm
-        # (measured 5x slowdown at 8g)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # sized to the host (see default_driver_memory); an
+        # undersized heap turns extraction into a GC storm, an
+        # oversized one gets the JVM killed
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

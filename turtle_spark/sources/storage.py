@@ -5,7 +5,15 @@ Logical layout (stage E): triples partitioned by
 
 * All triples of one subject land in one bucket -> subject-centric
   reads (serialization, per-entity queries) touch exactly one
-  partition directory; Catalyst prunes the rest from the scan.
+  partition directory.  ``read_subject`` computes the bucket on the
+  driver (``functions.hashing.xxh64_str``, byte-compatible with Spark's
+  ``xxhash64``) and lists only that ``bucket=<b>`` directory, so a
+  point lookup never pays the table-wide listing — a distributed job
+  once the table has more directories than
+  ``spark.sql.sources.parallelPartitionDiscovery.threshold``.  On a
+  local table it also takes the schema from the row schema Spark wrote
+  into the parquet footer instead of running an inference job, so a
+  lookup is one Spark job: the scan itself.
 * xxhash64 distributes uniformly, so bucket sizes stay balanced even
   when one namespace dominates the corpus — the skew story for the
   write path.
@@ -19,10 +27,21 @@ has no Iceberg jar, so the fallback is the tested path.
 
 from __future__ import annotations
 
+import json
+import os
+from urllib.parse import urlsplit
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructType
+
+from turtle_spark.functions.hashing import xxh64_str
 
 DEFAULT_BUCKETS = 64
+
+# footer key under which Spark's parquet writer records the row schema
+_SPARK_ROW_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -80,11 +99,49 @@ def read_triples(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def bucket_of(subject: str, n_buckets: int = DEFAULT_BUCKETS) -> int:
+    """Driver-side ``pmod(xxhash64(subject), n_buckets)``."""
+    return xxh64_str(subject) % n_buckets
+
+
+def _footer_schema(leaf: str) -> StructType | None:
+    """The row schema Spark wrote into the footer of a data file in the
+    local directory ``leaf``, or None when no such file carries one.
+    Spark's own inference reads the same footer, but as a Spark job."""
+    name = min((n for n in os.listdir(leaf) if not n.startswith(("_", "."))), default=None)
+    if name is None:
+        return None
+    raw = (pq.read_metadata(os.path.join(leaf, name)).metadata or {}).get(_SPARK_ROW_SCHEMA)
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
+def _is_dir(spark: SparkSession, path: str, local: bool) -> bool:
+    if local:
+        return os.path.isdir(path)
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).isDirectory(jpath)  # noqa: SLF001
+
+
 def read_subject(spark: SparkSession, path: str, subject: str, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
-    """Point lookup demonstrating bucket pruning: computes the bucket
-    driver-side and filters on the partition column, so only one
-    directory is scanned."""
-    df = spark.read.parquet(path)
+    """Point lookup on a ``write_triples`` table: one Spark job.
+
+    The bucket is computed on the driver and only its ``bucket=<b>``
+    directory is listed; ``basePath`` keeps ``bucket`` a partition
+    column, and the partition filter stays in the plan.  On a local
+    table the schema comes from Spark's own footer metadata instead of
+    an inference job; a URI path lets Spark infer it.  A missing bucket
+    directory (only possible for an absent subject) reads the table
+    root, so the empty result keeps the table's schema."""
+    leaf = f"{path.rstrip('/')}/bucket={bucket_of(subject, n_buckets)}"
+    local = not urlsplit(path).scheme
+    if _is_dir(spark, leaf, local):
+        reader = spark.read.option("basePath", path)
+        schema = _footer_schema(leaf) if local else None
+        if schema is not None:
+            reader = reader.schema(schema.add("bucket", IntegerType()))
+        df = reader.parquet(leaf)
+    else:
+        df = spark.read.parquet(path)
     return df.where(
         (F.col("bucket") == F.pmod(F.xxhash64(F.lit(subject)), F.lit(n_buckets)))
         & (F.col("subject") == subject)
