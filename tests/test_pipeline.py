@@ -12,6 +12,7 @@ from turtle_spark.operators.serialize import subject_blocks, turtle_text
 from turtle_spark.plans.manifest import StageManifest, dataframe_fingerprint
 from turtle_spark.plans.pipeline import run_pipeline
 from turtle_spark.sources.corpus import generate_docs
+from turtle_spark.sources import storage
 from turtle_spark.sources.storage import bucket_of, read_subject, write_triples
 
 _TRIPLE_DDL = (
@@ -119,7 +120,7 @@ def test_read_subject_equals_full_scan(spark, tmp_path):
         assert sorted(got) == sorted(by_subject[s]), s
 
 
-def test_read_subject_absent_subject_is_empty(spark, tmp_path):
+def test_read_subject_absent_subject_is_empty(spark, tmp_path, monkeypatch):
     subjects = [f"http://e/s{i}" for i in range(3)]
     path = str(tmp_path / "triples")
     _write_subjects(spark, path, subjects, n_buckets=8)
@@ -129,14 +130,23 @@ def test_read_subject_absent_subject_is_empty(spark, tmp_path):
     in_empty = next(s for s in absent if bucket_of(s, 8) not in filled)
     in_filled = next(s for s in absent if bucket_of(s, 8) in filled)
     assert not pathlib.Path(path, f"bucket={bucket_of(in_empty, 8)}").exists()
-    # a URI path takes the inferred-schema, Hadoop-FS branch
-    for table in (path, f"file://{path}"):
+
+    def check(table: str) -> None:
         for s in (in_empty, in_filled):
             hit = read_subject(spark, table, s, n_buckets=8)
             assert hit.schema == full_schema, (table, s)
             assert hit.collect() == [], (table, s)
         hit = read_subject(spark, table, subjects[0], n_buckets=8)
+        assert hit.schema == full_schema, table
         assert sorted(r.predicate for r in hit.collect()) == ["http://e/p0", "http://e/p1"]
+
+    # a scheme-less path and a file:// URI both resolve to the local
+    # filesystem and take the footer schema
+    check(path)
+    check(f"file://{path}")
+    # what a non-local filesystem takes: Spark infers the schema
+    monkeypatch.setattr(storage, "_local_dir", lambda fs, jpath: None)
+    check(path)
 
 
 def test_read_subject_runs_one_spark_job(spark, tmp_path):
@@ -148,16 +158,18 @@ def test_read_subject_runs_one_spark_job(spark, tmp_path):
     _write_subjects(spark, path, subjects, n_buckets=64)
     assert len(list(pathlib.Path(path).glob("bucket=*"))) > 32
     sc = spark.sparkContext
-    group = f"read-subject-{tmp_path.name}"
-    sc.setJobGroup(group, "one point lookup")
-    try:
-        rows = read_subject(spark, path, "http://e/s7").collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert sorted(r.object for r in rows) == ["o7", "o7"]
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    for i, table in enumerate((path, f"file://{path}")):
+        group = f"read-subject-{tmp_path.name}-{i}"
+        sc.setJobGroup(group, "one point lookup")
+        try:
+            rows = read_subject(spark, table, "http://e/s7").collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert sorted(r.object for r in rows) == ["o7", "o7"], table
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, table
+
 
 def test_subject_blocks_match_core_serializer(spark):
     triples = spark.createDataFrame(

@@ -15,7 +15,7 @@ def _gib(mem: str) -> int:
 
 
 def test_default_driver_memory_fits_physical_memory():
-    mem_gib = session.mem_total_kb() / (1024 * 1024)
+    mem_gib = session.mem_total_bytes() / 1024**3
     default = _gib(session.default_driver_memory())
     assert 1 <= default <= session.MAX_DRIVER_MEM_GB
     assert default <= mem_gib / 2 or default == 1
@@ -26,7 +26,7 @@ def test_default_driver_memory_fits_physical_memory():
     [(1, "1g"), (15.7, "7g"), (16, "8g"), (64, "24g"), (512, "24g")],
 )
 def test_default_driver_memory_halves_ram_with_cap(monkeypatch, total_gib, expected):
-    monkeypatch.setattr(session, "mem_total_kb", lambda: int(total_gib * 1024 * 1024))
+    monkeypatch.setattr(session, "mem_total_bytes", lambda: int(total_gib * 1024**3))
     assert session.default_driver_memory() == expected
 
 
@@ -37,4 +37,4 @@ def test_live_session_heap_fits_physical_memory(spark):
     if os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
         assert mem == os.environ["SPARK_GRAFT_DRIVER_MEM"]
     else:
-        assert _gib(mem) * 1024 * 1024 <= session.mem_total_kb()
+        assert _gib(mem) * 1024**3 <= session.mem_total_bytes()

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import math
 import random
-import struct
 from decimal import ROUND_HALF_UP, Decimal
 
 import numpy as np

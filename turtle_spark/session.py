@@ -22,10 +22,9 @@ from pyspark.sql import SparkSession
 MAX_DRIVER_MEM_GB = 24
 
 
-def mem_total_kb() -> int:
-    """Physical memory, from ``/proc/meminfo``."""
-    with open("/proc/meminfo") as f:
-        return next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+def mem_total_bytes() -> int:
+    """Physical memory in bytes (``MemTotal`` on Linux)."""
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
 
 
 def default_driver_memory() -> str:
@@ -33,7 +32,7 @@ def default_driver_memory() -> str:
     ``MAX_DRIVER_MEM_GB``.  In local mode the driver JVM is the whole
     engine and shares the host with its Python workers, so a heap sized
     past RAM gets the JVM OOM-killed mid-run instead of spilling."""
-    half_gb = mem_total_kb() // (2 * 1024 * 1024)
+    half_gb = mem_total_bytes() // (2 * 1024**3)
     return f"{min(max(1, half_gb), MAX_DRIVER_MEM_GB)}g"
 
 

@@ -13,7 +13,9 @@ Logical layout (stage E): triples partitioned by
   ``spark.sql.sources.parallelPartitionDiscovery.threshold``.  On a
   local table it also takes the schema from the row schema Spark wrote
   into the parquet footer instead of running an inference job, so a
-  lookup is one Spark job: the scan itself.
+  lookup is one Spark job: the scan itself.  The bucket directory is
+  resolved through the Hadoop filesystem, as Spark resolves it; a
+  non-local filesystem keeps Spark's schema inference.
 * xxhash64 distributes uniformly, so bucket sizes stay balanced even
   when one namespace dominates the corpus — the skew story for the
   write path.
@@ -29,7 +31,6 @@ from __future__ import annotations
 
 import json
 import os
-from urllib.parse import urlsplit
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -115,11 +116,12 @@ def _footer_schema(leaf: str) -> StructType | None:
     return StructType.fromJson(json.loads(raw)) if raw else None
 
 
-def _is_dir(spark: SparkSession, path: str, local: bool) -> bool:
-    if local:
-        return os.path.isdir(path)
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()).isDirectory(jpath)  # noqa: SLF001
+def _local_dir(fs, jpath) -> str | None:
+    """``jpath`` as a local-disk path when ``fs`` (the Hadoop filesystem
+    Spark resolves it with) is the local one, else None."""
+    if fs.getUri().getScheme() != "file":
+        return None
+    return fs.makeQualified(jpath).toUri().getPath()
 
 
 def read_subject(spark: SparkSession, path: str, subject: str, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
@@ -127,16 +129,21 @@ def read_subject(spark: SparkSession, path: str, subject: str, n_buckets: int = 
 
     The bucket is computed on the driver and only its ``bucket=<b>``
     directory is listed; ``basePath`` keeps ``bucket`` a partition
-    column, and the partition filter stays in the plan.  On a local
-    table the schema comes from Spark's own footer metadata instead of
-    an inference job; a URI path lets Spark infer it.  A missing bucket
-    directory (only possible for an absent subject) reads the table
-    root, so the empty result keeps the table's schema."""
+    column, and the partition filter stays in the plan.  The directory
+    is resolved through the Hadoop filesystem, as Spark resolves it (a
+    scheme-less path goes to ``fs.defaultFS``).  When that filesystem
+    is the local one, the schema comes from Spark's own footer metadata
+    instead of an inference job; on any other, Spark infers it.  A
+    missing bucket directory (only possible for an absent subject)
+    reads the table root, so the empty result keeps the table's
+    schema."""
     leaf = f"{path.rstrip('/')}/bucket={bucket_of(subject, n_buckets)}"
-    local = not urlsplit(path).scheme
-    if _is_dir(spark, leaf, local):
+    jleaf = spark._jvm.org.apache.hadoop.fs.Path(leaf)  # noqa: SLF001
+    fs = jleaf.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    if fs.isDirectory(jleaf):
         reader = spark.read.option("basePath", path)
-        schema = _footer_schema(leaf) if local else None
+        local = _local_dir(fs, jleaf)
+        schema = _footer_schema(local) if local is not None else None
         if schema is not None:
             reader = reader.schema(schema.add("bucket", IntegerType()))
         df = reader.parquet(leaf)
