@@ -5189,55 +5189,10 @@ def _golden_sql(name: str, sf_tag: str) -> str:
     return f"SELECT {select} FROM (VALUES\n{values}\n) AS t({slots})"
 
 
-def _driver_green() -> frozenset[str]:
-    """Queries whose MOST RECENT driver row (rows + schema + hash, no
-    err) is green.  Drives the registry's SELF-ROTATING order: the
-    driver grades the first 50 entries, so never-graded queries sort to
-    the front automatically each round — and because only the latest
-    CORRECTNESS row per query counts (later rounds override earlier
-    ones), a query that regresses red after an old green re-enters the
-    window for a retry instead of staying permanently exempt."""
-    latest: dict[str, bool] = {}
-
-    def _round_no(p: pathlib.Path) -> int:
-        # numeric round order, not filename order: an unpadded
-        # CORRECTNESS_r5.json must still sort after r04 (and before a
-        # hypothetical r10), or an older row would override the latest
-        digits = "".join(ch for ch in p.stem if ch.isdigit())
-        return int(digits) if digits else 0
-
-    for path in sorted(
-        pathlib.Path(__file__).resolve().parent.glob("CORRECTNESS_r*.json"),
-        key=_round_no,
-    ):
-        try:
-            rows = json.loads(path.read_text())
-        except (OSError, json.JSONDecodeError):
-            continue
-        for name, row in rows.items():
-            latest[name] = bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                # rows-only queries record hash_match null; any green
-                # driver row counts
-                and row.get("hash_match") is not False
-                and row.get("err") is None
-            )
-    return frozenset(n for n, ok in latest.items() if ok)
-
-
-_DRIVER_WINDOW = 50
-
-
-def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Canonical query table.  PRIORITY order among never-graded
-    queries (the front of this dict wins a window slot first);
-    ``queries()`` reorders it against the CORRECTNESS artifacts.
-
-    """
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Query registry: name -> ``(spark, sf_dir) -> DataFrame``.  Every
+    entry has an ``oracle_sql()`` twin (tests/test_oracle_parity.py)."""
     return {
-        # --- round-4 window: the 50 queries that still need their
-        # --- FIRST driver correctness row (driver grades positions 1-50)
         "q_frame_sample": _q_frame_sample,
         "q_sparql_update": _q_sparql_update,
         "q_void_stats": _q_void_stats,
@@ -5290,11 +5245,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_merge_upsert": _q_merge_upsert,
         "q_pipeline_lineage": _q_pipeline_lineage,
         "q_snapshot_expire": _q_snapshot_expire,
-        # --- deliberate overflow: 12 ungraded queries past the window,
-        # --- all plain-SQL-oracle twins that DuckDB RECOMPUTES at
-        # --- sf0.001 on every pytest run (tests/test_oracle_parity.py)
-        # --- — the strongest local evidence tier.  Declared in
-        # --- WINDOW_OVERFLOW; they rotate to the round-5 front.
         "q_direct_map": _q_direct_map,
         "q_vocab_drift": _q_vocab_drift,
         "q_script_mix": _q_script_mix,
@@ -5307,9 +5257,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_bm25_search": _q_bm25_search,
         "q_event_transitions": _q_event_transitions,
         "q_scd2_events": _q_scd2_events,
-        # --- driver-green in some prior round (r01/r02/r03); their
-        # --- correctness rows are already on record, so they ride
-        # --- past the window ---
         "q_serialize_roundtrip": _q_serialize_roundtrip,
         "q_minhash_dedup_docs": _q_minhash_dedup_docs,
         "q_simhash_dedup_docs": _q_simhash_dedup_docs,
@@ -5412,46 +5359,6 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "q_cosine_pairs": _q_cosine_pairs,
         "q_quality_score": _q_quality_score,
     }
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Query registry, SELF-ROTATING against the driver's artifacts.
-
-    ORDERING CONTRACT: the driver grades only the FIRST 50 entries
-    against the DuckDB oracle, so the registry orders itself by how
-    much driver evidence each query still needs —
-
-      1. queries with NO green CORRECTNESS row in any prior round
-         (first-timers and any red-row retries), in ``_registry()``'s
-         priority order;
-      2. queries already driver-green in some round — their rows are
-         on record, so they ride past the window.
-
-    The rotation that rounds 2-4 performed by hand is therefore
-    automatic: when ``CORRECTNESS_r04.json`` lands, its 50 newly-green
-    queries sort behind the remaining first-timers and round 5's
-    window fills itself.  ``WINDOW_OVERFLOW`` (the ungraded queries
-    that do not fit this round's window) is computed from the same
-    facts; ``tests/test_registry_window.py`` still enforces that every
-    overflow member is locally golden- or SQL-oracle-backed.
-    """
-    base = _registry()
-    green = _driver_green()
-    ordered = [n for n in base if n not in green] + [
-        n for n in base if n in green
-    ]
-    return {n: base[n] for n in ordered}
-
-
-# Ungraded queries past the driver's window THIS round — computed, not
-# hand-rotated.  Every member is locally oracle-backed (the guard test
-# proves it): plain-SQL twins are recomputed by DuckDB at sf0.001 on
-# every pytest run, golden-backed ones replay independently-derived
-# result sets, and tools/crosscheck.py rehearses all of them at the
-# driver's sf0.01.
-WINDOW_OVERFLOW = frozenset(
-    [n for n in queries() if n not in _driver_green()][_DRIVER_WINDOW:]
-)
 
 
 def oracle_sql(golden_sf: str = "sf0.01") -> dict[str, str]:

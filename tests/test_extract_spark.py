@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from tests.conftest import load_scan_fixtures
 from turtle_spark.operators.extract import (
-    extract_doc_metadata,
     extract_triples,
     media_triples,
     with_subject_hash,
@@ -76,16 +75,6 @@ def test_media_triples_jvm_only(spark, tmp_path):
         docs.select(F.explode("spans").alias("s")).where(F.col("s.kind") == "media").count()
     )
     assert len(rows) == expected
-
-
-def test_doc_metadata(spark):
-    docs = fixture_docs(spark)
-    meta = {r.doc_id: r for r in extract_doc_metadata(docs).collect()}
-    m = meta["read_prefix_and_base"]
-    assert m.base == "http://example.org/"
-    assert m.prefixes["foaf"] == "http://xmlns.com/foaf/0.1/"
-    assert m.n_triples == 3
-    assert m.n_text_spans == 1 and m.n_media_spans == 0
 
 
 def test_subject_hash_stable(spark):

@@ -81,14 +81,31 @@ def test_stream_structure():
     assert enc[:4] == b"fLaC"
     assert enc[4] == 0x80            # last metadata block, type STREAMINFO
     assert int.from_bytes(enc[5:8], "big") == 34
-    # STREAMINFO: samplerate 20 bits starting at byte 14 of the block
     info = enc[8 : 8 + 34]
+    # fixed blocking: min = max blocksize; the short last block (100
+    # samples here) does not count toward the minimum
+    assert int.from_bytes(info[0:2], "big") == 4096
+    assert int.from_bytes(info[2:4], "big") == 4096
+    # STREAMINFO: samplerate 20 bits starting at byte 14 of the block
     rate = (info[10] << 12) | (info[11] << 4) | (info[12] >> 4)
     assert rate == 8000
     n_total = ((info[13] & 0x0F) << 32) | int.from_bytes(info[14:18], "big")
     assert n_total == 100
     # first frame sync: 0xFF 0xF8 (14-bit sync + reserved + fixed)
     assert enc[42] == 0xFF and enc[43] == 0xF8
+
+
+def test_unknown_total_samples_decodes_every_frame():
+    # total samples 0 = unknown, with no MD5 set: decode until the data
+    # runs out instead of stopping before the first frame
+    x = (1000 * np.sin(np.arange(9000) * 0.02)).astype(np.int16)
+    enc = bytearray(encode_flac(x, 16000, block_size=4096))
+    enc[8 + 13] &= 0xF0                  # high nibble: bps-1; low: total
+    enc[8 + 14 : 8 + 18] = bytes(4)
+    enc[8 + 18 : 8 + 34] = bytes(16)     # MD5 unset
+    sr, dec = decode_flac(bytes(enc))
+    assert sr == 16000
+    assert np.array_equal(dec, x)
 
 
 def test_corruption_is_detected():

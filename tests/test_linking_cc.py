@@ -88,8 +88,7 @@ def test_link_terms_finds_near_duplicates(spark):
 def test_bucket_cap_bounds_pair_fanout(spark):
     # 200 identical-ish terms in one bucket; cap 10 -> at most C(10,2) pairs
     terms = _terms_df(spark, [f"shared-prefix-term-{i:03d}" for i in range(200)])
-    signed = linking.minhash_terms(terms)
-    buckets = linking.lsh_buckets(signed)
+    buckets = linking.lsh_band_keys(terms)
     pairs = linking.candidate_pairs(buckets, bucket_cap=10)
     # every bucket contributes <= 45 pairs; with 32 bands the global
     # count is bounded by 32*45 (dedup shrinks it further)

@@ -112,5 +112,12 @@ def test_golden_xxh64_matches_spark(spark):
 
 
 def test_all_queries_have_oracles():
-    """Round-2 bar: every queries() entry carries an oracle row."""
-    assert set(entrymod.queries()) == set(entrymod.oracle_sql())
+    """Every registry entry has an oracle_sql twin, and every oracle
+    names a registry entry."""
+    qs = set(entrymod.queries())
+    oracle = set(entrymod.oracle_sql())
+    assert qs - oracle == set(), (
+        f"queries with no oracle_sql entry (add a SQL twin or golden): "
+        f"{sorted(qs - oracle)}"
+    )
+    assert oracle - qs == set(), f"oracles with no query: {sorted(oracle - qs)}"

@@ -192,6 +192,47 @@ def test_subject_blocks_match_core_serializer(spark):
     assert ("http://e/z", "http://e/p", "http://e/q") in {t[:3] for t in reparsed}
 
 
+def test_subject_blocks_independent_of_row_order(spark):
+    """Objects that tie on lexical form (``"'"`` and ``"'"^^xsd:string``)
+    render in one order whatever order the shuffle delivers the rows in:
+    blocks are byte-identical under row permutations and repartitioning."""
+    from hypothesis import example, given, settings, strategies as st
+
+    row = st.tuples(
+        st.just("d"),
+        st.integers(0, 9),
+        st.sampled_from(["http://e/a", "http://e/b"]),
+        st.sampled_from(["http://e/p", "http://e/q"]),
+        st.sampled_from(["'", "x", "http://e/o"]),
+        st.sampled_from(["", None, "en"]),
+        st.sampled_from(["", None, "xsd:string"]),
+        st.sampled_from(["literal", "iri", ""]),
+    )
+    tie = [
+        ("d", 0, "http://e/a", "http://e/p", "'", "", "", "literal"),
+        ("d", 1, "http://e/a", "http://e/p", "'", "", "xsd:string", "literal"),
+    ]
+
+    def blocks(rows, partitions):
+        df = spark.createDataFrame(rows, _TRIPLE_DDL).repartition(partitions)
+        return dict(subject_blocks(df).collect())
+
+    @settings(max_examples=5, deadline=None)
+    @example(rows=tie, seed=1, partitions=2)
+    @given(st.lists(row, min_size=1, max_size=12), st.integers(0, 2**16), st.integers(1, 4))
+    def check(rows, seed, partitions):
+        import random
+
+        shuffled = list(rows)
+        random.Random(seed).shuffle(shuffled)
+        assert blocks(shuffled, partitions) == blocks(rows[::-1], 1)
+
+    check()
+    assert blocks(tie, 1)["http://e/a"] == blocks(tie[::-1], 2)["http://e/a"] == (
+        '<http://e/a> <http://e/p> "\'", "\'"^^xsd:string .\n'
+    )
+
+
 def test_turtle_text_with_pragmas_roundtrip(spark):
     triples = spark.createDataFrame(
         [("d", 0, "http://base.example/x", "http://base.example/p", "v", "", "", "literal")],

@@ -80,6 +80,6 @@ def test_minhash_signature_is_pandas_udf(spark):
     terms = spark.createDataFrame([("a b c d e",)], "term string").withColumn(
         "term_id", F.xxhash64("term")
     )
-    plan = _plan(linking.minhash_terms(terms))
+    plan = _plan(linking.lsh_band_keys(terms))
     assert "ArrowEvalPython" in plan
     assert "BatchEvalPython" not in plan

@@ -38,3 +38,39 @@ def test_live_session_heap_fits_physical_memory(spark):
         assert mem == os.environ["SPARK_GRAFT_DRIVER_MEM"]
     else:
         assert _gib(mem) * 1024**3 <= session.mem_total_bytes()
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records the conf that
+    ``get_spark`` asks for and returns it instead of a session."""
+
+    def __init__(self):
+        self.conf: dict[str, str] = {}
+
+    def appName(self, _name):
+        return self
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        return self.conf
+
+
+@pytest.mark.parametrize(
+    ("env", "expected"),
+    [(None, len(os.sched_getaffinity(0))), ("3", 3)],
+)
+def test_default_cores_follow_env_or_host(monkeypatch, env, expected):
+    if env is None:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", env)
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    conf = session.get_spark()
+    assert conf["master"] == f"local[{expected}]"

@@ -4,11 +4,10 @@ Replicates the driver's correctness gate (row count + sorted-column
 schema + exact values vs the DuckDB oracle) at ``sf0.01`` — the SF the
 driver actually grades — for a chosen slice of the registry.  The
 pytest mirror (tests/test_oracle_parity.py) runs every query at
-sf0.001 on every run; this tool is the pre-round rehearsal that the
-FIRST ``--window`` queries (the ones about to receive their first
-driver row) also hold at the graded SF.
+sf0.001 on every run; this tool rehearses the same check at the graded
+SF for every query, or for the named ones.
 
-Run: ``python tools/crosscheck.py [sf_dir] [--window N | name ...]``
+Run: ``python tools/crosscheck.py [sf_dir] [name ...]``
 """
 
 from __future__ import annotations
@@ -45,27 +44,17 @@ def main() -> None:
     import __spark_entry__ as entrymod
     from turtle_spark.session import get_spark
 
-    args = [a for a in sys.argv[1:]]
     sf_dir = "/root/testdata/sf0.01"
     names: list[str] = []
-    window = 0
-    i = 0
-    while i < len(args):
-        if args[i] == "--window":
-            window = int(args[i + 1])
-            i += 2
-        elif args[i].startswith("/"):
-            sf_dir = args[i]
-            i += 1
+    for arg in sys.argv[1:]:
+        if arg.startswith("/"):
+            sf_dir = arg
         else:
-            names.append(args[i])
-            i += 1
+            names.append(arg)
 
     sf_tag = "sf0.01" if sf_dir.endswith("sf0.01") else pathlib.Path(sf_dir).name
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql(golden_sf=sf_tag)
-    if window:
-        names = list(qs)[:window]
     if not names:
         names = list(qs)
 

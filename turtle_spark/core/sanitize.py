@@ -41,23 +41,14 @@ TYPE_BLANK = "blank"
 # ^[-0-9]+(\.[0-9]+)? — "starts like a number" (scanner/sanitize.go:15)
 _NUMBER_RE = re.compile(r"^[-0-9]+(?:\.[0-9]+)?")
 
-_TRIM_PAIRS = (
-    ('"""', '"""'),
-    ("'''", "'''"),
-    ("<", ">"),
-    ("", ">"),
-    ('"', '"'),
-    ("'", "'"),
-)
-
-_LITERAL_DELIMS = ('"""', "'''", '"', "'")
-
 
 def trim(token: str) -> str:
     """Strip the first matching delimiter pair (scanner/sanitize.go:143-157).
 
-    Unrolled in the reference's pair order — this runs once per token
-    slot inside the extraction hot path.
+    Unrolled in the reference's pair order (triple double quotes,
+    triple single quotes, angle brackets, a bare closing ``>``, double
+    quotes, single quotes) — this runs once per token slot inside the
+    extraction hot path.
     """
     if not token:
         return ""
@@ -86,27 +77,6 @@ def trim(token: str) -> str:
         # pair ("<", ">") before the bare ("", ">") pair
         return token[1:-1] if c0 == "<" else token[:-1]
     return token
-
-
-def last_annotation_index(token: str, annotation: str) -> int:
-    """Index of a trailing annotation after a closing quote delimiter.
-
-    Only tokens that *start* with a quote delimiter can carry an
-    annotation, and the annotation must sit at/after the last closing
-    delimiter — this protects ``@`` and ``^^`` inside literal bodies
-    (scanner/sanitize.go:166-186).
-    """
-    for delim in _LITERAL_DELIMS:
-        if not token.startswith(delim):
-            continue
-        last_delim = token.rfind(delim)
-        if last_delim == 0:
-            continue
-        last_ann = token.rfind(annotation)
-        if last_ann < last_delim:
-            continue
-        return last_ann
-    return -1
 
 
 def expand_prefix(token: str, value: str) -> str:

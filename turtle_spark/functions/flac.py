@@ -209,10 +209,10 @@ def encode_flac(
 
     # STREAMINFO bits: 16+16 min/max blocksize, 24+24 min/max framesize
     # (0 = unknown), 20 samplerate, 3 channels-1, 5 bps-1, 36 total
-    # samples, then the 16-byte MD5 of the unencoded samples
+    # samples, then the 16-byte MD5 of the unencoded samples.  Fixed
+    # blocking: min = max = block_size (the short last block is exempt)
     w = _BitWriter()
-    last_bs = n_total % block_size or block_size
-    w.put(min(block_size, last_bs) if n_total else block_size, 16)
+    w.put(block_size, 16)
     w.put(block_size, 16)
     w.put(0, 24)
     w.put(0, 24)
@@ -226,10 +226,9 @@ def encode_flac(
     # STREAMINFO), 24 bits length
     out += bytes([0x80]) + len(info).to_bytes(3, "big") + info
 
+    # an empty input is a header-only stream: zero frames, MD5 of b""
     for fi, start in enumerate(range(0, n_total, block_size)):
         out += _encode_frame(x[start : start + block_size], fi)
-    if n_total == 0:
-        pass  # header-only stream: zero frames, MD5 of empty input
     return bytes(out)
 
 
@@ -356,16 +355,19 @@ def decode_flac(data: bytes) -> tuple[int, np.ndarray]:
     if sample_rate is None:
         raise ValueError("FLAC missing STREAMINFO")
 
+    # total samples 0 means "unknown": decode frames until the data
+    # runs out, and there is no count to check
+    known = n_total > 0
     out: list[np.ndarray] = []
     got = 0
-    while got < n_total and pos < len(data):
+    while (got < n_total or not known) and pos < len(data):
         blk, pos = _decode_frame(data, pos, sample_rate)
         out.append(blk)
         got += blk.size
     samples = (
         np.concatenate(out).astype(np.int16) if out else np.empty(0, np.int16)
     )
-    if samples.size != n_total:
+    if known and samples.size != n_total:
         raise ValueError(
             f"FLAC stream ended early: {samples.size} of {n_total} samples"
         )

@@ -47,32 +47,9 @@ TRIPLES_SCHEMA = T.StructType(
     ]
 )
 
-DOC_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("base", T.StringType()),
-        T.StructField("prefixes", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("n_triples", T.LongType()),
-        T.StructField("n_text_spans", T.IntegerType()),
-        T.StructField("n_media_spans", T.IntegerType()),
-    ]
-)
-
 DOC_NS = "http://turtle-spark.dev/ns#"
 HAS_MEDIA = DOC_NS + "hasMedia"
 DOC_IRI_PREFIX = "http://turtle-spark.dev/doc/"
-
-
-def assemble_text(spans) -> str:
-    """Concatenate text spans in offset order (Python-side mirror of
-    ``assembled_text_col`` — used by tests and small tools).
-
-    The per-row invariant (span-sequence equality) is preserved because
-    assembly only *reads* spans; documents flow through extraction
-    untouched.
-    """
-    ordered = sorted(spans, key=lambda s: s["offset"])
-    return "\n".join(s["text"] for s in ordered if s["kind"] == "text")
 
 
 def assembled_text_col() -> F.Column:
@@ -108,8 +85,6 @@ def extract_triples(docs: DataFrame, base: str = "", prefixes: dict[str, str] | 
     corpus (the reference's Config semantics); document directives
     override them per document.
     """
-    import pandas as pd
-
     seed_prefixes = dict(prefixes) if prefixes else {}
 
     import pyarrow as pa
@@ -156,36 +131,6 @@ def extract_triples(docs: DataFrame, base: str = "", prefixes: dict[str, str] | 
     # largest JVM cost on this path
     flat = docs.select("doc_id", assembled_text_col().alias("doc_text"))
     return flat.mapInArrow(parse_batches, schema=TRIPLES_SCHEMA)
-
-
-def extract_doc_metadata(docs: DataFrame, base: str = "", prefixes: dict[str, str] | None = None) -> DataFrame:
-    """Per-document parse metadata: accumulated base, prefixes, counts."""
-    import pandas as pd
-
-    seed_prefixes = dict(prefixes) if prefixes else {}
-
-    def meta_batches(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "base", "prefixes", "n_triples")}
-            for doc_id, text in zip(pdf["doc_id"], pdf["doc_text"]):
-                result = parse_document(text, base=base, prefixes=seed_prefixes)
-                out["doc_id"].append(doc_id)
-                out["base"].append(result.base)
-                out["prefixes"].append(result.prefixes)
-                out["n_triples"].append(len(result.triples))
-            pdf_out = pd.DataFrame(out)
-            pdf_out["n_triples"] = pdf_out["n_triples"].astype("int64")
-            pdf_out["n_text_spans"] = pdf["n_text_spans"].reset_index(drop=True)
-            pdf_out["n_media_spans"] = pdf["n_media_spans"].reset_index(drop=True)
-            yield pdf_out
-
-    flat = docs.select(
-        "doc_id",
-        assembled_text_col().alias("doc_text"),
-        F.size(F.expr("filter(spans, s -> s.kind = 'text')")).cast("int").alias("n_text_spans"),
-        F.size(F.expr("filter(spans, s -> s.kind = 'media')")).cast("int").alias("n_media_spans"),
-    )
-    return flat.mapInPandas(meta_batches, schema=DOC_META_SCHEMA)
 
 
 def media_triples(docs: DataFrame) -> DataFrame:

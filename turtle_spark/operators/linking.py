@@ -72,52 +72,6 @@ def distinct_terms(mentions: DataFrame) -> DataFrame:
     return mentions.select("term_id", "term").dropDuplicates(["term_id"])
 
 
-def minhash_terms(
-    terms: DataFrame,
-    num_perm: int = DEFAULT_NUM_PERM,
-    shingle_k: int = DEFAULT_SHINGLE_K,
-    seed: int = 7,
-) -> DataFrame:
-    """Add ``signature: array<long>`` per distinct term.
-
-    Shingling and the permutation matrix are evaluated across the whole
-    Arrow batch (one concatenated numpy pass + doc-aligned reduceat),
-    not per row — bitwise-identical outputs, measured ≥1.5x faster."""
-    a, b = minhash_permutations(num_perm, seed)
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def sig_udf(col: pd.Series) -> pd.Series:
-        texts = [(s or "") for s in col]
-        shingles = char_shingle_hashes_batch(texts, shingle_k)
-        sigs = minhash_signatures_batch(shingles, a, b)
-        return pd.Series(list(sigs))
-
-    return terms.withColumn("signature", sig_udf("term"))
-
-
-def lsh_buckets(signed: DataFrame, bands: int = DEFAULT_BANDS) -> DataFrame:
-    """Explode each signature into ``bands`` bucket keys.
-
-    NOTE: when the signature column exists only to be banded, use
-    ``lsh_band_keys`` instead — running this after ``minhash_terms``
-    chains two pandas UDFs in one stage, which Spark executes as
-    pipelined Python workers feeding each other batch-by-batch
-    (measured ~30x slower than the fused single-UDF pass)."""
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def bands_udf(sig: pd.Series) -> pd.Series:
-        if len(sig) == 0:
-            return pd.Series([], dtype=object)
-        mat = np.stack([np.asarray(s, dtype=np.int64) for s in sig])
-        return pd.Series(list(band_hashes_batch(mat, bands)))
-
-    return signed.select(
-        "term_id",
-        "term",
-        F.posexplode(bands_udf("signature")).alias("band_index", "band_hash"),
-    )
-
-
 def lsh_band_keys(
     terms: DataFrame,
     num_perm: int = DEFAULT_NUM_PERM,
@@ -130,8 +84,8 @@ def lsh_band_keys(
     Shingling, MinHash signatures, and band folding run inside a single
     pandas UDF (all across-row numpy), so the text crosses the Python
     boundary exactly once and no intermediate 128-long signature arrays
-    shuttle through Arrow.  Bitwise-identical keys to
-    ``lsh_buckets(minhash_terms(terms))``.
+    shuttle through Arrow (two chained pandas UDFs in one stage run as
+    pipelined Python workers feeding each other, measured ~30x slower).
 
     The input is ``spread`` first: a terms table read back from a
     checkpoint parquet is a few MB = 1-2 scan partitions, which would

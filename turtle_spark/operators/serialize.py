@@ -36,6 +36,12 @@ BLOCK_SCHEMA = T.StructType(
 )
 
 
+def _null_safe(row: tuple) -> tuple:
+    """Sort key for a row of strings that may hold nulls; null sorts
+    before, and apart from, the empty string."""
+    return tuple((v is not None, v or "") for v in row)
+
+
 def subject_blocks(
     triples: DataFrame,
     base: str = "",
@@ -48,11 +54,11 @@ def subject_blocks(
         # pragma emission happens once at assembly time; blocks still
         # get base-relativization and prefix compaction
         g = GraphBuffer(base=base, prefixes=pfx)
-        for row in pdf.itertuples(index=False):
-            g.accept_annotated(
-                row.subject, row.predicate, row.object,
-                row.label, row.datatype, row.objecttype,
-            )
+        # GraphBuffer breaks ties on an object's lexical form by
+        # insertion order; feeding the rows sorted makes the block
+        # independent of the order the shuffle delivers them in
+        for row in sorted(pdf.itertuples(index=False, name=None), key=_null_safe):
+            g.accept_annotated(*row)
         text = g.render(include_pragmas=False)
         return pd.DataFrame({"subject": [pdf["subject"].iloc[0]], "block": [text]})
 

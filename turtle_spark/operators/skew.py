@@ -114,13 +114,9 @@ def pin(df: DataFrame) -> DataFrame:
     storage; MEMORY_AND_DISK spills instead of recomputing, and LRU
     eviction bounds a long session.  At cluster scale pin only what is
     O(corpus-projection) small (id + sketch columns), never raw
-    payloads.  ``TURTLE_SPARK_NO_PIN=1`` disables pinning (A/B knob)."""
-    import os
-
+    payloads."""
     from pyspark import StorageLevel
 
-    if os.environ.get("TURTLE_SPARK_NO_PIN"):
-        return df
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 

@@ -96,10 +96,6 @@ def write_triples_iceberg(
     )
 
 
-def read_triples(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def bucket_of(subject: str, n_buckets: int = DEFAULT_BUCKETS) -> int:
     """Driver-side ``pmod(xxhash64(subject), n_buckets)``."""
     return xxh64_str(subject) % n_buckets
