@@ -1,98 +1,17 @@
-"""Driver-window regression guard.
+"""Query-registry coverage guard.
 
-The driver grades only the FIRST 50 entries of ``queries()`` against
-the DuckDB oracle (verified empirically: the 50 keys in
-``CORRECTNESS_r02.json`` were exactly registry positions 1-50).  A new
-query appended past position 50 would silently never receive a driver
-correctness row.  This test enforces the registry's ordering contract:
-any entry at position >= 50 must already have a green row (rows +
-schema + hash match) in some prior round's CORRECTNESS artifact.
+``queries()`` returns the registry in declared order; every entry must
+carry an ``oracle_sql`` twin so it is graded against DuckDB rather
+than by a weaker rows-only check.
 """
 
 from __future__ import annotations
 
-import json
-import pathlib
-
-REPO = pathlib.Path(__file__).resolve().parent.parent
-DRIVER_WINDOW = 50
-
-
-def _green_anywhere() -> set[str]:
-    green: set[str] = set()
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        for name, row in json.loads(path.read_text()).items():
-            if (
-                row.get("rows_match")
-                and row.get("schema_match")
-                # rows-only queries (no oracle SQL) record hash_match
-                # null; a driver row at all means the query ran green
-                and row.get("hash_match") is not False
-                and row.get("err") is None
-            ):
-                green.add(name)
-    return green
-
-
-def test_every_query_graded_or_inside_window():
-    import __spark_entry__ as entrymod
-
-    names = list(entrymod.queries())
-    green = _green_anywhere()
-    hidden = [
-        name
-        for pos, name in enumerate(names)
-        if pos >= DRIVER_WINDOW
-        and name not in green
-        and name not in entrymod.WINDOW_OVERFLOW
-    ]
-    assert not hidden, (
-        f"queries past the driver's {DRIVER_WINDOW}-entry window with no "
-        f"prior green CORRECTNESS row (reorder them to the front, or — if "
-        f"the window is genuinely full of ungraded queries — declare the "
-        f"rotation in WINDOW_OVERFLOW): {hidden}"
-    )
-
-
-def test_window_overflow_is_minimal_and_golden_backed():
-    """WINDOW_OVERFLOW is a rotation queue, not an exemption list: it
-    may only be as large as the genuine overflow (ungraded queries
-    minus window size), every member must be locally golden-backed,
-    and members must actually sit past the window."""
-    import __spark_entry__ as entrymod
-
-    names = list(entrymod.queries())
-    green = _green_anywhere()
-    ungraded = [n for n in names if n not in green]
-    allowed = max(0, len(ungraded) - DRIVER_WINDOW)
-    assert len(entrymod.WINDOW_OVERFLOW) <= allowed, (
-        f"WINDOW_OVERFLOW has {len(entrymod.WINDOW_OVERFLOW)} entries but "
-        f"only {allowed} queries genuinely overflow the window"
-    )
-    for name in entrymod.WINDOW_OVERFLOW:
-        assert name in names[DRIVER_WINDOW:], (
-            f"{name} is declared overflow but sits inside the window"
-        )
-        if name in (entrymod._CORPUS_GOLDENS | entrymod._SF_GOLDENS):
-            golden = REPO / "tests" / "goldens" / "corpus" / f"{name}.json"
-            golden_sf = REPO / "tests" / "goldens" / "sf0.01" / f"{name}.json"
-            assert golden.exists() or golden_sf.exists(), (
-                f"{name} overflows the window without a local golden oracle"
-            )
-        else:
-            # plain-SQL oracle: DuckDB RECOMPUTES the result (stronger
-            # than a golden replay); the local mirror grades it at
-            # sf0.001 every pytest run
-            assert name in entrymod.oracle_sql(), (
-                f"{name} overflows the window with neither a golden nor "
-                f"a SQL oracle"
-            )
-
 
 def test_every_query_has_oracle_entry():
-    """Every registry entry needs an oracle_sql twin (the driver falls
-    back to a weaker rows-only check without one — keep that set
-    empty unless genuinely non-SQL-expressible, and document why)."""
+    """Every registry entry needs an oracle_sql twin (without one only
+    a rows-only check is possible — keep that set empty unless a query
+    is genuinely non-SQL-expressible, and document why)."""
     import __spark_entry__ as entrymod
 
     qs = set(entrymod.queries())
@@ -102,20 +21,3 @@ def test_every_query_has_oracle_entry():
         f"queries with no oracle_sql entry (add a SQL twin or golden): "
         f"{sorted(missing)}"
     )
-
-
-def test_registry_self_rotates_on_new_green_rows(monkeypatch):
-    """When a round's CORRECTNESS artifact lands, its newly-green
-    queries must drop behind the remaining first-timers automatically
-    (the by-hand rotation of rounds 2-4, now a property of queries())."""
-    import __spark_entry__ as entrymod
-
-    names = list(entrymod.queries())
-    still_ungraded = [
-        n for n in names[DRIVER_WINDOW:] if n not in _green_anywhere()
-    ]
-    fake_green = frozenset(_green_anywhere() | set(names[:DRIVER_WINDOW]))
-    monkeypatch.setattr(entrymod, "_driver_green", lambda: fake_green)
-    rotated = list(entrymod.queries())
-    assert rotated[: len(still_ungraded)] == still_ungraded
-    assert set(rotated) == set(names)
