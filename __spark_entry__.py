@@ -4549,7 +4549,8 @@ def _q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_serialize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serializer through the driver contract: extract fixture docs and
-    render sorted compact-Turtle subject blocks (applyInPandas); returns
+    render sorted compact-Turtle subject blocks (one mapInArrow pass per
+    partition behind one subject shuffle); returns
     deterministic block statistics (roundtrip parity itself is pinned by
     tests/test_serializer.py + test_pipeline.py)."""
     from turtle_spark.operators.extract import extract_triples

@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
+import contextlib
 import json
 import pathlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from turtle_spark.core.parser import parse_triples
-from turtle_spark.operators.serialize import subject_blocks, turtle_text
+from turtle_spark.core.serializer import GraphBuffer
+from turtle_spark.operators.serialize import _null_safe, subject_blocks, turtle_text
 from turtle_spark.plans.manifest import StageManifest, dataframe_fingerprint
 from turtle_spark.plans.pipeline import run_pipeline
 from turtle_spark.sources.corpus import generate_docs
@@ -149,26 +152,76 @@ def test_read_subject_absent_subject_is_empty(spark, tmp_path, monkeypatch):
     check(path)
 
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+@contextlib.contextmanager
+def _conf(spark, key: str, value: str):
+    """Set a runtime SQL conf for the block, then restore it."""
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
+def _collect_counting_jobs(spark, group: str, make_df) -> tuple[list, int]:
+    """Build a DataFrame with ``make_df()`` and collect it under its own
+    job group (building it may list and infer, which run jobs too);
+    return the rows and the number of Spark jobs the group ran."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        rows = make_df().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
+    return rows, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_read_subject_runs_one_spark_job(spark, tmp_path):
-    """More bucket directories than Spark's parallel-listing threshold
-    (32): listing the table root, or inferring its schema, would each
-    add a job before the lookup's own."""
+    """More bucket directories than Spark's default parallel-listing
+    threshold (32, set here as a cluster session would have it):
+    listing the table root, or inferring its schema, would each add a
+    job before the lookup's own."""
     subjects = [f"http://e/s{i}" for i in range(400)]
     path = str(tmp_path / "triples")
     _write_subjects(spark, path, subjects, n_buckets=64)
     assert len(list(pathlib.Path(path).glob("bucket=*"))) > 32
-    sc = spark.sparkContext
-    for i, table in enumerate((path, f"file://{path}")):
-        group = f"read-subject-{tmp_path.name}-{i}"
-        sc.setJobGroup(group, "one point lookup")
-        try:
-            rows = read_subject(spark, table, "http://e/s7").collect()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
-        assert sorted(r.object for r in rows) == ["o7", "o7"], table
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # noqa: SLF001
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1, table
+    with _conf(spark, _LISTING_THRESHOLD, "32"):
+        for i, table in enumerate((path, f"file://{path}")):
+            rows, jobs = _collect_counting_jobs(
+                spark,
+                f"read-subject-{tmp_path.name}-{i}",
+                lambda: read_subject(spark, table, "http://e/s7"),
+            )
+            assert sorted(r.object for r in rows) == ["o7", "o7"], table
+            assert jobs == 1, table
+
+
+def test_table_root_read_runs_no_listing_job(spark, tmp_path):
+    """A local session lists a 64-bucket table root without a parallel
+    listing job: reading 4 buckets runs the schema inference and the
+    scan, 2 jobs (3 at Spark's default threshold)."""
+    subjects = [f"http://e/s{i}" for i in range(400)]
+    path = str(tmp_path / "triples")
+    _write_subjects(spark, path, subjects, n_buckets=64)
+    buckets = sorted({bucket_of(s, 64) for s in subjects})[:4]
+    want = sum(2 for s in subjects if bucket_of(s, 64) in buckets)
+
+    def read():
+        return spark.read.parquet(path).where(F.col("bucket").isin(*buckets))
+
+    rows, jobs = _collect_counting_jobs(spark, f"root-read-{tmp_path.name}", read)
+    assert len(rows) == want and jobs == 2
+    with _conf(spark, _LISTING_THRESHOLD, "32"):
+        rows, jobs = _collect_counting_jobs(spark, f"root-read-32-{tmp_path.name}", read)
+    assert len(rows) == want and jobs == 3
 
 
 def test_subject_blocks_match_core_serializer(spark):
@@ -231,6 +284,85 @@ def test_subject_blocks_independent_of_row_order(spark):
     assert blocks(tie, 1)["http://e/a"] == blocks(tie[::-1], 2)["http://e/a"] == (
         '<http://e/a> <http://e/p> "\'", "\'"^^xsd:string .\n'
     )
+
+
+def _reference_block(rows) -> str:
+    """The core serializer over one subject's rows, fed in the order
+    ``subject_blocks`` feeds them."""
+    g = GraphBuffer()
+    for row in sorted(rows, key=_null_safe):
+        g.accept_annotated(*row)
+    return g.render(include_pragmas=False)
+
+
+def test_subject_blocks_group_spans_arrow_batches(spark):
+    """A subject whose rows span many Arrow batches still renders as
+    one block, equal to the core serializer over all of its rows."""
+    rows = [("http://e/hub", f"http://e/p{i % 3}", f"o{i}", "", "", "literal") for i in range(11)]
+    rows += [(f"http://e/s{i}", "http://e/p", "x", "", "", "literal") for i in range(5)]
+    rows += [("http://e/tail", "http://e/p", f"t{i}", "", "", "literal") for i in range(3)]
+    df = spark.createDataFrame(
+        [("d", i, *r) for i, r in enumerate(rows)], _TRIPLE_DDL
+    ).repartition(3)
+    with _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "2"):
+        got = subject_blocks(df).collect()
+    by_subject: dict[str, list] = {}
+    for r in rows:
+        by_subject.setdefault(r[0], []).append(r)
+    assert sorted(r.subject for r in got) == sorted(by_subject)
+    for r in got:
+        assert r.block == _reference_block(by_subject[r.subject]), r.subject
+
+
+def test_subject_blocks_drop_duplicates_like_the_core(spark):
+    """Duplicate 6-tuples, with null and empty-string variants of the
+    annotations, render byte-identically to the core serializer over
+    the set of the 6-tuples."""
+    import itertools
+
+    six = [
+        (s, p, o, label, dt, ot)
+        for s, p, o in itertools.product(
+            ["http://e/a", "http://e/b"], ["http://e/p", "http://e/q"], ["'", "x"]
+        )
+        for label, dt, ot in [
+            ("", "", "literal"),
+            (None, None, "literal"),
+            ("", None, ""),
+            (None, "", None),
+            ("en", "", "literal"),
+            ("", "xsd:string", "literal"),
+        ]
+    ]
+    rows = [("d", i, *r) for i, r in enumerate(six * 3)]
+    with _conf(spark, "spark.sql.execution.arrow.maxRecordsPerBatch", "5"):
+        got = dict(subject_blocks(spark.createDataFrame(rows, _TRIPLE_DDL).repartition(4)).collect())
+    distinct = set(six)
+    assert got == {
+        s: _reference_block([r for r in distinct if r[0] == s]) for s in ("http://e/a", "http://e/b")
+    }
+
+
+@pytest.mark.parametrize("subject", [None, ""])
+def test_subject_blocks_reject_missing_subject(spark, subject):
+    rows = [
+        ("d", 0, "http://e/a", "http://e/p", "x", "", "", "literal"),
+        ("d", 1, subject, "http://e/p", "y", "", "", "literal"),
+    ]
+    with pytest.raises(Exception, match="no subject specified"):
+        subject_blocks(spark.createDataFrame(rows, _TRIPLE_DDL)).collect()
+
+
+def test_subject_blocks_plan_has_one_subject_shuffle(spark):
+    """One hash shuffle on subject feeds the render; no aggregate
+    (dedup happens in the core serializer)."""
+    df = spark.createDataFrame(
+        [("d", 0, "http://e/a", "http://e/p", "x", "", "", "literal")], _TRIPLE_DDL
+    )
+    plan = subject_blocks(df)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Exchange hashpartitioning(subject#" in plan, plan
+    assert "HashAggregate" not in plan, plan
 
 
 def test_turtle_text_with_pragmas_roundtrip(spark):

@@ -74,3 +74,11 @@ def test_default_cores_follow_env_or_host(monkeypatch, env, expected):
     monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
     conf = session.get_spark()
     assert conf["master"] == f"local[{expected}]"
+
+
+def test_local_session_skips_parallel_listing(monkeypatch):
+    """``local[N]`` gains nothing from a distributed listing job, so
+    the threshold sits above a 64-bucket table's directory count."""
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    conf = session.get_spark(cores=2)
+    assert int(conf["spark.sql.sources.parallelPartitionDiscovery.threshold"]) >= 1024

@@ -14,9 +14,10 @@ Re-implements the reference's serialization buffer (nvkp/turtle
 * ``@base`` / ``@prefix`` pragmas come first (the reference emits
   prefixes in random map order; we emit them sorted by tag).
 
-On Spark this exact logic runs per subject group inside
-``applyInPandas`` (see ``turtle_spark.operators.serialize``); this
-module stays Spark-free so the golden-layout tests pin it directly.
+On Spark this exact logic renders each subject's rows inside one
+``mapInArrow`` pass per partition (see
+``turtle_spark.operators.serialize``); this module stays Spark-free so
+the golden-layout tests pin it directly.
 """
 
 from __future__ import annotations
@@ -28,6 +29,15 @@ from turtle_spark.core.sanitize import (
     is_iri,
     literal_edge,
 )
+
+
+def pragma_lines(base: str = "", prefixes: dict[str, str] | None = None) -> list[str]:
+    """The ``@base`` / ``@prefix`` header, one directive per line
+    without its newline: base first, then prefixes sorted by tag."""
+    lines = [f"@base <{base}> ."] if base else []
+    pfx = prefixes or {}
+    lines.extend(f"@prefix {tag}: <{pfx[tag]}> ." for tag in sorted(pfx))
+    return lines
 
 
 class NoSubjectError(ValueError):
@@ -91,7 +101,7 @@ class GraphBuffer:
         """
         parts: list[str] = []
         if include_pragmas:
-            self._write_pragmas(parts)
+            parts.extend(f"{line}\n" for line in pragma_lines(self.base, self.prefixes))
 
         for subject in sorted(self._m):
             parts.append(f"{self._sanitize(subject, TYPE_IRI, False)} ")
@@ -110,12 +120,6 @@ class GraphBuffer:
                     parts.append(" ;")
             parts.append(" .\n")
         return "".join(parts)
-
-    def _write_pragmas(self, parts: list[str]) -> None:
-        if self.base:
-            parts.append(f"@base <{self.base}> .\n")
-        for tag in sorted(self.prefixes):
-            parts.append(f"@prefix {tag}: <{self.prefixes[tag]}> .\n")
 
     def _sanitize_object(self, obj: tuple[str, str, str, str]) -> str:
         item, typ, datatype, label = obj

@@ -3,11 +3,16 @@
 The reference's serializer is a global in-memory sort
 (graph/graph.go:101-149).  Distributed equivalent:
 
-* ``dropDuplicates`` -> the S1 dedup semantics (hash aggregate,
-  map-side partial combine for free);
-* ``groupBy(subject)`` + ``applyInPandas`` -> each subject's block is
-  rendered by the exact pure-Python core (byte-wise predicate/object
+* ``repartition(subject)`` + ``sortWithinPartitions(subject)`` -> one
+  shuffle puts each subject's rows next to each other in one task
+  (no partition count, so AQE can coalesce small exports);
+* ``mapInArrow`` -> one Python pass per partition: consecutive rows of
+  a subject form a group, carried across Arrow batches, and each group
+  is rendered by the exact pure-Python core (byte-wise predicate/object
   sorts, compact ``;``/``,`` layout, quote selection);
+* S1 dedup semantics come from the core itself: ``GraphBuffer`` drops
+  an exact-duplicate object on insert, so no ``dropDuplicates`` shuffle
+  runs first;
 * global subject order = ``orderBy(subject)`` — Spark's UTF8_BINARY
   collation is byte order, identical to the reference's Go sort;
 * pragmas are prepended driver-side (constant-size header).
@@ -21,12 +26,14 @@ single giant string.
 
 from __future__ import annotations
 
-import pandas as pd
+from itertools import groupby
+from operator import itemgetter
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from turtle_spark.core.serializer import GraphBuffer
+from turtle_spark.core.serializer import GraphBuffer, pragma_lines
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -34,6 +41,8 @@ BLOCK_SCHEMA = T.StructType(
         T.StructField("block", T.StringType()),
     ]
 )
+
+_SIX = ("subject", "predicate", "object", "label", "datatype", "objecttype")
 
 
 def _null_safe(row: tuple) -> tuple:
@@ -50,22 +59,51 @@ def subject_blocks(
     """One compact-Turtle text block per subject (distributed)."""
     pfx = dict(prefixes) if prefixes else {}
 
-    def render(pdf: pd.DataFrame) -> pd.DataFrame:
+    def render(rows: list[tuple]) -> str:
         # pragma emission happens once at assembly time; blocks still
         # get base-relativization and prefix compaction
         g = GraphBuffer(base=base, prefixes=pfx)
         # GraphBuffer breaks ties on an object's lexical form by
         # insertion order; feeding the rows sorted makes the block
         # independent of the order the shuffle delivers them in
-        for row in sorted(pdf.itertuples(index=False, name=None), key=_null_safe):
+        for row in sorted(rows, key=_null_safe):
             g.accept_annotated(*row)
-        text = g.render(include_pragmas=False)
-        return pd.DataFrame({"subject": [pdf["subject"].iloc[0]], "block": [text]})
+        return g.render(include_pragmas=False)
 
-    deduped = triples.dropDuplicates(
-        ["subject", "predicate", "object", "label", "datatype", "objecttype"]
-    ).select("subject", "predicate", "object", "label", "datatype", "objecttype")
-    return deduped.groupBy("subject").applyInPandas(render, schema=BLOCK_SCHEMA)
+    def render_batches(batches):
+        # rows arrive sorted by subject; a subject's group may span
+        # batches, so the last group of a batch stays open until a
+        # different subject (or the end of the partition) closes it
+        open_rows: list[tuple] = []
+        for batch in batches:
+            subjects: list[str] = []
+            blocks: list[str] = []
+            rows = zip(*(col.to_pylist() for col in batch.columns))
+            for subject, group in groupby(rows, key=itemgetter(0)):
+                if open_rows and open_rows[0][0] == subject:
+                    open_rows.extend(group)
+                    continue
+                if open_rows:
+                    subjects.append(open_rows[0][0])
+                    blocks.append(render(open_rows))
+                open_rows = list(group)
+            yield _block_batch(subjects, blocks)
+        if open_rows:
+            yield _block_batch([open_rows[0][0]], [render(open_rows)])
+
+    return (
+        triples.select(*_SIX)
+        .repartition("subject")
+        .sortWithinPartitions("subject")
+        .mapInArrow(render_batches, schema=BLOCK_SCHEMA)
+    )
+
+
+def _block_batch(subjects: list[str], blocks: list[str]) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(subjects, type=pa.string()), pa.array(blocks, type=pa.string())],
+        names=["subject", "block"],
+    )
 
 
 def turtle_text(
@@ -80,9 +118,5 @@ def turtle_text(
         .orderBy("subject")
         .collect()
     )
-    header = []
-    if base:
-        header.append(f"@base <{base}> .\n")
-    for tag in sorted(pfx):
-        header.append(f"@prefix {tag}: <{pfx[tag]}> .\n")
-    return "".join(header) + "".join(r.block for r in blocks)
+    header = "".join(f"{line}\n" for line in pragma_lines(base, pfx))
+    return header + "".join(r.block for r in blocks)

@@ -9,6 +9,10 @@ merely *parameterized* down for local test runs:
   batch-vectorized, never per-row Python);
 * shuffle partition count is a knob because the right value is a
   function of input bytes per partition, not a constant.
+* file listing stays in-process: the master is always
+  ``local[N]``, so Spark's distributed listing of a directory tree
+  (one job whenever a read sees more than 32 paths, which every read
+  of a 64-bucket table root does) only adds a job to each read.
 """
 
 from __future__ import annotations
@@ -75,6 +79,12 @@ def get_spark(
         # extraction stage).  On a cluster with HDFS-style locality,
         # raise this back via extra_conf.
         .config("spark.locality.wait", "0s")
+        # single-node/local: a parallel listing job only spreads the
+        # listing over the same host's cores; skipping it took a
+        # 4-bucket read of a 64-bucket table root from 3 jobs to 2
+        # (median 0.42 -> 0.17 s on 4 cores).  On a cluster with remote
+        # storage, set Spark's 32 back via extra_conf.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # sized to the host (see default_driver_memory); an
         # undersized heap turns extraction into a GC storm, an
         # oversized one gets the JVM killed

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from turtle_spark.core.serializer import pragma_lines
 from turtle_spark.sources.nquads import QUAD_SCHEMA
 
 __all__ = ["graph_blocks", "trig_text", "read_trig", "split_graph_blocks"]
@@ -113,12 +114,8 @@ def trig_text(
     blocks = (
         graph_blocks(quads, base=base, prefixes=pfx).orderBy("graph").collect()
     )
-    header = []
-    if base:
-        header.append(f"@base <{base}> .\n")
-    for tag in sorted(pfx):
-        header.append(f"@prefix {tag}: <{pfx[tag]}> .\n")
-    return "".join(header) + "".join(r.block for r in blocks)
+    header = "".join(f"{line}\n" for line in pragma_lines(base, pfx))
+    return header + "".join(r.block for r in blocks)
 
 
 # --------------------------------------------------------------------------

@@ -9,8 +9,8 @@ distributed:
   ``spark.read.text(wholetext=True)`` and parse through the standard
   extraction operator, so a directory of millions of documents
   partitions across the cluster.
-* ``write_turtle``: subject blocks render distributed
-  (``applyInPandas`` per subject) and write as text part-files; the
+* ``write_turtle``: subject blocks render distributed (one
+  ``mapInArrow`` pass per partition) and write as text part-files; the
   pragma header goes into ``_header.ttl``.  ``write_turtle_single``
   collects into one canonical sorted document for small graphs.
 """
@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from turtle_spark.core.serializer import pragma_lines
 from turtle_spark.operators.extract import extract_triples
 from turtle_spark.operators.serialize import subject_blocks, turtle_text
 
@@ -64,11 +65,7 @@ def write_turtle(
         .write.mode(mode)
         .text(path)
     )
-    header = []
-    if base:
-        header.append(f"@base <{base}> .")
-    for tag in sorted(prefixes or {}):
-        header.append(f"@prefix {tag}: <{prefixes[tag]}> .")
+    header = pragma_lines(base, prefixes)
     if header:
         spark = triples.sparkSession
         spark.createDataFrame([(h,) for h in header], "value string").coalesce(
