@@ -982,13 +982,11 @@ GROUP BY n_name
 
 
 def _q_windowed_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The streaming watermark-window operator through the oracle gate.
+    """The watermark-window operator through the oracle gate.
 
-    ``windowed_event_counts`` is the SAME function the streaming path
-    runs (`streaming/stream.py`); the watermark is a no-op on a batch
-    frame and batch/stream parity is pinned by
-    tests/test_streaming_io.py — so this row gives the streaming
-    surface a hash-exact oracle check instead of tests-only status."""
+    ``windowed_event_counts`` (`streaming/stream.py`) takes a streaming
+    or a batch frame; the watermark is a no-op on a batch frame, so
+    this row checks its aggregation hash-exact against DuckDB."""
     from turtle_spark.streaming.stream import windowed_event_counts
 
     return windowed_event_counts(_t(spark, sf_dir, "events"))

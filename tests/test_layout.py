@@ -10,7 +10,6 @@ from turtle_spark.operators.layout import (
     exact_rank,
     pruning_report,
     z_value,
-    zorder_files,
 )
 
 
@@ -65,24 +64,6 @@ def test_z_order_is_locality_preserving(spark):
     assert z[(0, 0)] < z[(1, 0)] < z[(0, 1)] < z[(1, 1)] < z[(2, 0)]
 
 
-def test_zorder_files_are_balanced_and_deterministic(spark):
-    rows = [(i % 97, (i * 13) % 89) for i in range(1000)]
-    df = spark.createDataFrame(rows, "a long, b long")
-    sizes = {
-        r["file"]: r["n"]
-        for r in zorder_files(df, "a", "b", n_files=10)
-        .groupBy("file").agg(F.count("*").alias("n")).collect()
-    }
-    assert set(sizes) == set(range(10))
-    assert all(v == 100 for v in sizes.values())
-    again = {
-        r["file"]: r["n"]
-        for r in zorder_files(df.repartition(7), "a", "b", n_files=10)
-        .groupBy("file").agg(F.count("*").alias("n")).collect()
-    }
-    assert again == sizes
-
-
 def test_exact_rank_matches_global_window(spark):
     from pyspark.sql import Window
 
@@ -107,8 +88,6 @@ def test_exact_rank_matches_global_window(spark):
 def test_layout_plans_have_no_unpartitioned_window(spark):
     rows = [(i % 97, (i * 13) % 89) for i in range(1000)]
     df = spark.createDataFrame(rows, "a long, b long")
-    filed = zorder_files(df, "a", "b", n_files=10)
-    assert _unpartitioned_windows(filed) == []
     sel = (F.col("a") >= 10) & (F.col("b") >= 10)
     rep = pruning_report(df, "a", "b", sel, n_files=10)
     assert _unpartitioned_windows(rep) == []

@@ -321,59 +321,3 @@ def test_incremental_components_noop_batch_is_empty(spark):
     # a batch of edges already internal to existing components
     internal = base.limit(20)
     assert incremental_components(a0, internal).count() == 0
-
-
-def test_link_terms_incremental_equals_full_slice(spark):
-    """With caps non-binding, the incremental batch edges must equal
-    the full link_terms run's new-touching slice bit-for-bit, and the
-    maintained components must equal a full recompute."""
-    from pyspark.sql import functions as F
-
-    from turtle_spark.operators.cc import (
-        apply_component_delta,
-        connected_components,
-        incremental_components,
-    )
-    from turtle_spark.operators.linking import (
-        link_terms,
-        link_terms_incremental,
-        lsh_band_keys,
-    )
-
-    rows = []
-    for i in range(60):
-        fam, var = i % 12, i // 12
-        rows.append((i, f"http://ex.org/entity/Family{fam}/name-variant-{var:02d}"))
-    all_terms = spark.createDataFrame(rows, "term_id long, term string")
-    old_terms = all_terms.where(F.col("term_id") < 45)
-    new_terms = all_terms.where(F.col("term_id") >= 45)
-
-    full = link_terms(all_terms, threshold=0.5)
-    new_ids = {r["term_id"] for r in new_terms.collect()}
-    want = {
-        (r["src"], r["dst"])
-        for r in full.collect()
-        if r["src"] in new_ids or r["dst"] in new_ids
-    }
-    old_bands = lsh_band_keys(old_terms).select("term_id", "band_index", "band_hash")
-    inc = link_terms_incremental(old_terms, old_bands, new_terms, threshold=0.5)
-    got = {(r["src"], r["dst"]) for r in inc.collect()}
-    assert got == want
-
-    old_edges = full.where(
-        ~F.col("src").isin(list(new_ids)) & ~F.col("dst").isin(list(new_ids))
-    ).select("src", "dst")
-    a0 = connected_components(old_edges, assume_distinct=True)
-    maintained = {
-        (r["node"], r["component"])
-        for r in apply_component_delta(
-            a0, incremental_components(a0, inc.select("src", "dst"))
-        ).collect()
-    }
-    recomputed = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            full.select("src", "dst"), assume_distinct=True
-        ).collect()
-    }
-    assert maintained == recomputed

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from turtle_spark.core.parser import parse_triples
 from turtle_spark.core.serializer import GraphBuffer
 from turtle_spark.operators.serialize import _null_safe, subject_blocks, turtle_text
-from turtle_spark.plans.manifest import StageManifest, dataframe_fingerprint
+from turtle_spark.plans.manifest import StageManifest
 from turtle_spark.plans.pipeline import run_pipeline
 from turtle_spark.sources.corpus import generate_docs
 from turtle_spark.sources import storage
@@ -73,11 +73,6 @@ def test_manifest_partial_resume(spark, tmp_path):
     # fingerprint change invalidates
     _, resumed3 = m.load_or_compute(spark, "s1", "fp2", compute)
     assert resumed3 is False and len(calls) == 2
-
-
-def test_dataframe_fingerprint_partition_invariant(spark):
-    df = spark.range(100).select(F.col("id").cast("string").alias("x"))
-    assert dataframe_fingerprint(df) == dataframe_fingerprint(df.repartition(13))
 
 
 def test_bucketed_storage_prunes(spark, tmp_path):

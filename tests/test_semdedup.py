@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from turtle_spark.operators.semdedup import semantic_dedup, semantic_pairs
+from turtle_spark.operators.semdedup import semantic_dedup
 
 _SCHEMA = "vec_id long, embedding array<double>"
 
@@ -68,13 +68,6 @@ def test_cluster_cap_bounds_pairs(vecs):
     out = semantic_dedup(vecs, threshold=0.9, n_clusters=1, cluster_cap=3)
     ids = sorted(r["vec_id"] for r in out.collect())
     assert ids == [1, 2, 3]
-
-
-def test_pairs_shape_and_threshold(vecs):
-    pairs = semantic_pairs(vecs, threshold=0.9, n_clusters=1).collect()
-    assert {(p["id1"], p["id2"]) for p in pairs} == {(1, 2), (1, 3), (2, 3), (10, 11)}
-    assert all(p["id1"] < p["id2"] for p in pairs)
-    assert all(p["cosine"] >= 0.9 for p in pairs)
 
 
 def test_threshold_filters_everything(vecs):

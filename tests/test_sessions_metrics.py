@@ -1,21 +1,11 @@
-"""Sessionization (both forms agree) + P/R metric operator."""
+"""Sessionization gap boundary + P/R metric operator."""
 
 from __future__ import annotations
 
 from turtle_spark.operators.extract import extract_triples
 from turtle_spark.operators.metrics import triple_set_pr
-from turtle_spark.operators.sessions import sessionize, sessionize_native
+from turtle_spark.operators.sessions import sessionize
 from turtle_spark.sources.corpus import fixture_docs
-
-
-def test_sessionize_forms_agree(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    a = sessionize(events, gap_minutes=120)
-    b = sessionize_native(events, gap_minutes=120)
-    key = lambda r: (r.user_id, r.session_start)
-    ra, rb = sorted(a.collect(), key=key), sorted(b.collect(), key=key)
-    assert ra == rb
-    assert len(ra) > 0
 
 
 def test_sessionize_gap_boundary(spark):

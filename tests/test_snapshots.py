@@ -1,6 +1,6 @@
 """Snapshot catalog (mini-Iceberg) semantics: time travel, atomic
 commit, optimistic concurrency, incremental reads, rollback, orphan
-detection, bucket-pruned subject reads."""
+detection, compaction, merge and expiry."""
 
 from __future__ import annotations
 
@@ -10,11 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from turtle_spark.sources.snapshots import (
-    CommitConflictError,
-    SnapshotCatalog,
-    read_subject_at,
-)
+from turtle_spark.sources.snapshots import CommitConflictError, SnapshotCatalog
 
 
 def _df(spark, lo, hi):
@@ -114,19 +110,6 @@ def test_optimistic_concurrency_conflict(spark, tmp_path):
         cat.commit(_df(spark, 10, 20))
 
 
-def test_bucket_pruned_subject_read(spark, tmp_path):
-    from turtle_spark.sources.storage import with_bucket
-
-    cat = SnapshotCatalog(tmp_path / "t")
-    cat.commit(with_bucket(_df(spark, 0, 200)).repartition("bucket"))
-    out = read_subject_at(cat, spark, "s7")
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0]["object"] == "7"
-    # the bucket equality must reach the scan as a pushed filter
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "bucket" in plan
-
-
 def test_rejects_uri_paths(tmp_path):
     with pytest.raises(ValueError, match="local filesystem"):
         SnapshotCatalog("hdfs://nn/warehouse/t")
@@ -153,6 +136,23 @@ def test_compact_preserves_rows_and_history(spark, tmp_path):
         cat.incremental(spark, 2, 5)
     # but a post-compaction append range is incrementally scannable
     assert cat.incremental(spark, 4, 5).count() == 5
+
+
+def test_compact_conflict_leaves_current(spark, tmp_path):
+    cat = SnapshotCatalog(tmp_path / "t")
+    cat.commit(_df(spark, 0, 10))
+    cat.commit(_df(spark, 10, 20))
+    # a competing writer holds snapshot 3 but has not swapped CURRENT
+    (cat.root / "metadata" / "snap-00003.json").write_text(
+        json.dumps(
+            {"version": 3, "op": "append", "parent": 2,
+             "segments": ["seg-00001-append"], "rows": 10}
+        )
+    )
+    with pytest.raises(CommitConflictError):
+        cat.compact(spark, target_partitions=1)
+    assert (cat.root / "metadata" / "CURRENT").read_text() == "2"
+    assert cat.read(spark).count() == 20
 
 
 def test_merge_upsert_semantics(spark, tmp_path):

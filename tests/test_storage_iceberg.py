@@ -13,7 +13,6 @@ directory key.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from turtle_spark.sources.storage import (
     iceberg_available,
@@ -82,39 +81,13 @@ def test_bucket_is_partition_directory(spark, triples, tmp_path):
     assert spark.read.parquet(path).count() == 40
 
 
-def test_bucketed_table_joins_without_exchange(spark, tmp_path):
-    """The co-location contract: a subject-keyed self-join of the
-    bucketed triple table plans with ZERO Exchange — each task joins
-    bucket i against bucket i in place.  This is the property the
-    1000-executor traversal relies on; directory partitioning alone
-    does not provide it."""
-    from turtle_spark.operators.extract import extract_triples
-    from turtle_spark.sources.corpus import generate_docs
-    from turtle_spark.sources.storage import write_triples_table
+def test_write_triples_one_file_per_bucket(triples, tmp_path):
+    import os
 
-    triples = extract_triples(generate_docs(spark, 50, seed=11))
-    write_triples_table(
-        triples, "bucketed_triples_test", path=str(tmp_path / "tbl"), n_buckets=8
-    )
-    try:
-        t1 = spark.table("bucketed_triples_test").select("subject", "predicate")
-        t2 = spark.table("bucketed_triples_test").select(
-            F.col("subject"), F.col("predicate").alias("p2")
-        )
-        # force a real join (no broadcast shortcut)
-        with_conf = spark.conf
-        old = with_conf.get("spark.sql.autoBroadcastJoinThreshold")
-        with_conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = t1.join(t2, "subject").where(F.col("predicate") < F.col("p2"))
-            plan = joined._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                joined._jdf.queryExecution(), "formatted"
-            )
-            assert "Exchange" not in plan, plan
-            assert "SortMergeJoin" in plan
-            # and it actually runs
-            assert joined.count() > 0
-        finally:
-            with_conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bucketed_triples_test")
+    path = str(tmp_path / "t")
+    write_triples(triples.repartition(4), path, n_buckets=8)
+    dirs = [d for d in os.listdir(path) if d.startswith("bucket=")]
+    assert dirs
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(path, d)) if not f.startswith((".", "_"))]
+        assert len(files) == 1, (d, files)

@@ -1,4 +1,4 @@
-"""Turtle file source/sink + Structured Streaming paths."""
+"""Turtle file source/sink + the stream-stream interval join."""
 
 from __future__ import annotations
 
@@ -8,14 +8,8 @@ from pyspark.sql import functions as F
 
 from tests.conftest import load_scan_fixtures
 from turtle_spark.core.parser import parse_triples
-from turtle_spark.sources.corpus import generate_docs
 from turtle_spark.sources.turtle_io import read_turtle, write_turtle_single
-from turtle_spark.streaming.stream import (
-    stream_docs,
-    stream_extract_triples,
-    stream_windowed_counts,
-    windowed_event_counts,
-)
+from turtle_spark.streaming.stream import stream_interval_join
 
 
 def test_read_turtle_files(spark, tmp_path):
@@ -49,110 +43,10 @@ def test_write_turtle_single_roundtrip(spark, tmp_path):
     assert ("http://e/b", "http://e/p", "http://e/a") in reparsed
 
 
-def test_stream_extract_matches_batch(spark, tmp_path):
-    from turtle_spark.operators.extract import extract_triples
-
-    docs_path = str(tmp_path / "docs")
-    generate_docs(spark, 30, seed=17).write.parquet(docs_path)
-
-    out_path = str(tmp_path / "triples_out")
-    q = stream_extract_triples(
-        stream_docs(spark, docs_path),
-        out_path,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-    streamed = spark.read.parquet(out_path).drop("batch_id")
-    batch = extract_triples(spark.read.parquet(docs_path))
-    key = lambda r: (r.doc_id, r.seq)
-    assert sorted(streamed.collect(), key=key) == sorted(batch.collect(), key=key)
-
-    # idempotence: replaying a batch_id (what foreachBatch does after a
-    # mid-write failure) must replace its partition, not append dupes
-    from turtle_spark.operators.extract import extract_triples as _ex
-
-    replay = (
-        _ex(spark.read.parquet(docs_path))
-        .withColumn("batch_id", F.lit(0))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-    )
-    replay.parquet(out_path)
-    again = spark.read.parquet(out_path).drop("batch_id")
-    assert sorted(again.collect(), key=key) == sorted(batch.collect(), key=key)
-
-
-def test_stream_windowed_counts_matches_batch(spark, tmp_path, sf_dir):
-    # stage events into a directory (streaming file source requirement)
-    events_dir = str(tmp_path / "events_dir")
-    spark.read.parquet(f"{sf_dir}/events.parquet").write.parquet(events_dir)
-    batch = windowed_event_counts(spark.read.parquet(events_dir), window="1 day")
-    out_path = str(tmp_path / "win_out")
-    q = stream_windowed_counts(
-        spark.readStream.schema(spark.read.parquet(events_dir).schema).parquet(events_dir),
-        out_path,
-        str(tmp_path / "win_ckpt"),
-        window="1 day",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    streamed = spark.read.parquet(out_path)
-    # append mode withholds windows not yet finalized by the watermark;
-    # everything emitted must match the batch result exactly
-    bkey = {
-        (r.window_start, r.event_type): (r.n_events, r.min_value, r.max_value)
-        for r in batch.collect()
-    }
-    emitted = streamed.collect()
-    assert len(emitted) > 0
-    for r in emitted:
-        assert bkey[(r.window_start, r.event_type)] == (
-            r.n_events, r.min_value, r.max_value,
-        )
-
-
-def test_stream_dedup_matches_batch(spark, tmp_path):
-    """Streaming exact dedup (watermark-bounded state) must keep the
-    same distinct keys as the batch dropDuplicates over the same data,
-    with duplicates arriving across micro-batch (file) boundaries."""
-    import datetime as dt
-
-    from turtle_spark.streaming.stream import stream_dedup_to_parquet
-
-    src = str(tmp_path / "src")
-    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
-    rows_a = [(f"doc-{i % 4}", f"text {i % 4}", t0 + dt.timedelta(minutes=i)) for i in range(6)]
-    rows_b = [(f"doc-{i % 5}", f"text {i % 5}", t0 + dt.timedelta(minutes=30 + i)) for i in range(6)]
-    schema = "doc_id string, text string, ts timestamp"
-    spark.createDataFrame(rows_a, schema).coalesce(1).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(rows_b, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
-    q = stream_dedup_to_parquet(
-        stream, ["doc_id"], out, ckpt, ts_col="ts", watermark="2 hours",
-        available_now=True,
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    batch = spark.read.parquet(src).dropDuplicates(["doc_id"])
-    assert got.count() == batch.count() == 5
-    assert {r.doc_id for r in got.collect()} == {r.doc_id for r in batch.collect()}
-
-
 def test_stream_interval_join_matches_batch(spark, tmp_path, sf_dir):
     """Stream-stream interval join (attribution shape): the streaming
     run over file-source micro-batches must emit exactly the batch
     result of the same function on the same data."""
-    from turtle_spark.streaming.stream import stream_interval_join
-
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     events_dir = str(tmp_path / "events_dir")
     # two files so the join state crosses micro-batch boundaries
@@ -204,101 +98,3 @@ def test_stream_interval_join_matches_batch(spark, tmp_path, sf_dir):
     # inner stream-stream joins emit matches as they arrive; on a
     # finite input everything must be emitted and nothing extra
     assert streamed == batch
-
-
-def test_stream_novelty_screen_matches_batch(spark, tmp_path, sf_dir):
-    """The streaming novelty screen must label documents exactly as the
-    batch operator does — across micro-batch boundaries (2 files per
-    trigger forces several batches), since the screen is stateless
-    given the index."""
-    from turtle_spark.operators.dedup import build_novelty_index, screen_against_index
-    from turtle_spark.streaming.stream import stream_novelty_screen
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    corpus = docs.where(F.pmod(F.col("doc_id"), F.lit(5)) != 0)
-    batch = docs.where(F.pmod(F.col("doc_id"), F.lit(5)) == 0)
-
-    batch_dir = str(tmp_path / "incoming")
-    batch.repartition(6).write.parquet(batch_dir)  # several files -> several triggers
-
-    index = build_novelty_index(corpus)
-    out_path = str(tmp_path / "screened")
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(batch_dir)
-    )
-    q = stream_novelty_screen(
-        stream, index, out_path, str(tmp_path / "ckpt"),
-        threshold=0.5, available_now=True,
-    )
-    q.awaitTermination(180)
-
-    streamed = {
-        (r.doc_id, r.status, r.matched_id, r.jaccard)
-        for r in spark.read.parquet(out_path).collect()
-    }
-    expected = {
-        (r.doc_id, r.status, r.matched_id, r.jaccard)
-        for r in screen_against_index(batch, index, threshold=0.5).collect()
-    }
-    assert streamed == expected
-
-    # replay idempotency: foreachBatch is at-least-once, so a replayed
-    # micro-batch (same batch_id) must REPLACE its own output partition
-    # rather than append duplicates.  Wiping the checkpoint and running
-    # the identical availableNow stream again replays every batch with
-    # the same batch ids — row count and content must be unchanged.
-    n_rows = spark.read.parquet(out_path).count()
-    import shutil
-
-    shutil.rmtree(str(tmp_path / "ckpt"))
-    q2 = stream_novelty_screen(
-        stream, index, out_path, str(tmp_path / "ckpt"),
-        threshold=0.5, available_now=True,
-    )
-    q2.awaitTermination(180)
-    replayed_df = spark.read.parquet(out_path)
-    assert replayed_df.count() == n_rows
-    replayed = {
-        (r.doc_id, r.status, r.matched_id, r.jaccard)
-        for r in replayed_df.collect()
-    }
-    assert replayed == expected
-
-
-def test_stream_commit_snapshots_transactional(spark, tmp_path):
-    """Each micro-batch lands as one catalog snapshot; a replayed
-    batch_id is skipped (catalog-level idempotency); the final table
-    state equals the batch union and history records the batches."""
-    from turtle_spark.sources.snapshots import SnapshotCatalog
-    from turtle_spark.streaming.stream import stream_commit_snapshots
-
-    docs_path = str(tmp_path / "docs")
-    # two parquet files -> with maxFilesPerTrigger=1, two micro-batches
-    generate_docs(spark, 10, seed=3).coalesce(1).write.parquet(docs_path)
-    generate_docs(spark, 10, seed=4).coalesce(1).write.mode("append").parquet(docs_path)
-
-    table = str(tmp_path / "snaps")
-    q = stream_commit_snapshots(
-        stream_docs(spark, docs_path, max_files_per_trigger=1),
-        table,
-        str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
-
-    cat = SnapshotCatalog(table)
-    hist = cat.history()
-    assert len(hist) == 2
-    assert sorted(s.properties["batch_id"] for s in hist) == [0, 1]
-    assert cat.read(spark).count() == spark.read.parquet(docs_path).count()
-
-    # replay batch 0 (simulating post-crash foreachBatch rerun): the
-    # catalog must skip it, not append a third snapshot
-    batch0 = spark.read.parquet(docs_path).limit(5)
-    before = cat.current_version()
-    # call the idempotency path directly
-    if not any(s.properties.get("batch_id") == 0 for s in cat.history()):
-        cat.commit(batch0, properties={"batch_id": 0})
-    assert cat.current_version() == before

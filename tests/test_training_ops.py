@@ -8,8 +8,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from turtle_spark.operators.dedup import (
-    exact_dedup,
-    exact_duplicates,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
@@ -44,14 +42,6 @@ def _dup_docs(spark):
         (4, "completely unrelated content about spark shuffle partitions here"),
     ]
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_exact_dedup(spark):
-    d = _dup_docs(spark)
-    groups = exact_duplicates(d).collect()
-    assert len(groups) == 1 and groups[0].n_docs == 2 and groups[0].keep_id == 1
-    kept = {r.doc_id for r in exact_dedup(d).collect()}
-    assert kept == {1, 3, 4}
 
 
 def test_ngram_jaccard_pairs(spark):

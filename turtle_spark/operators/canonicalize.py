@@ -41,11 +41,7 @@ def canonical_map(terms: DataFrame, assignments: DataFrame) -> DataFrame:
     )
 
 
-def apply_canonical_map(
-    triples: DataFrame,
-    cmap: DataFrame,
-    broadcast_threshold: int = BROADCAST_MAP_MAX_ROWS,
-) -> DataFrame:
+def apply_canonical_map(triples: DataFrame, cmap: DataFrame) -> DataFrame:
     """Rewrite subject/object through the canonical map.
 
     Two left joins keyed on xxhash64 of the string, each GUARDED by
@@ -54,9 +50,10 @@ def apply_canonical_map(
     64-bit collision — a certainty at that scale, ~n^2/2^65 expected —
     can then never rewrite an unrelated subject; the collided row
     simply doesn't match and passes through unchanged.  The map side
-    is broadcast when small.  Literal objects are never rewritten.
+    is broadcast when it has at most ``BROADCAST_MAP_MAX_ROWS`` rows.
+    Literal objects are never rewritten.
     """
-    use_broadcast = cmap.count() <= broadcast_threshold
+    use_broadcast = cmap.count() <= BROADCAST_MAP_MAX_ROWS
     m = F.broadcast(cmap) if use_broadcast else cmap
 
     sub_map = m.select(

@@ -3,8 +3,9 @@
 Five tiers, cheapest first — at 100 TB you run them in this order and
 each tier shrinks the next tier's input:
 
-1. **exact** — sha256 content hash, groupBy; map-side partial
-   aggregation makes this one cheap shuffle of 32-byte keys;
+1. **exact** — sha256 content hash, one cheap shuffle of 32-byte
+   keys (``q_exact_dedup_docs`` in ``__spark_entry__`` computes it
+   inline; ``screen_against_index`` uses it as its first screen);
 2. **ngram-Jaccard** — word-shingle inverted index join; exact but
    quadratic per shared shingle, so shingle posting lists are capped
    (same skew reasoning as the LSH bucket cap);
@@ -31,29 +32,6 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from turtle_spark.operators import linking, skew
-
-
-def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Content-hash groups with >1 member: (content_hash, n_docs, keep_id)."""
-    return (
-        docs.select(F.col(id_col), F.sha2(F.col(text_col), 256).alias("content_hash"))
-        .groupBy("content_hash")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min(id_col).alias("keep_id"),
-        )
-        .where(F.col("n_docs") > 1)
-    )
-
-
-def exact_dedup(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id representative of each exact-content group."""
-    w = Window.partitionBy(F.sha2(F.col(text_col), 256)).orderBy(F.col(id_col))
-    return (
-        docs.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def duplicate_spans(
@@ -543,7 +521,6 @@ def screen_against_index(
     shingle_k: int = 5,
     seed: int = 7,
     candidate_cap: int = 64,
-    pin_batch: bool = True,
 ) -> DataFrame:
     """Incremental dedup: label every new document against an existing
     corpus index — (doc_id, status, matched_id, jaccard) with status
@@ -562,19 +539,14 @@ def screen_against_index(
     """
     from turtle_spark.operators import linking
 
-    # ``pin_batch=False`` for callers that invoke this repeatedly on a
-    # long-lived session (the streaming micro-batch path): pin() has no
-    # unpersist hook here, so a pin per trigger would accumulate one
-    # persisted DataFrame per micro-batch forever.  Such callers should
-    # persist/unpersist ``new_docs`` around the call instead.
-    batch = skew.spread(
-        new_docs.select(
-            F.col(id_col).alias("doc_id"), F.col(text_col).alias("term")
-        ),
-        "doc_id",
+    batch = skew.pin(
+        skew.spread(
+            new_docs.select(
+                F.col(id_col).alias("doc_id"), F.col(text_col).alias("term")
+            ),
+            "doc_id",
+        )
     )
-    if pin_batch:
-        batch = skew.pin(batch)
     # exact tier: content-hash equi-join (the cheapest screen first)
     exact = (
         batch.select("doc_id", F.sha2("term", 256).alias("content_hash"))

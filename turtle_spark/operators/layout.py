@@ -272,32 +272,6 @@ def exact_ranks(
     return out
 
 
-def zorder_files(
-    df: DataFrame,
-    a_col: str,
-    b_col: str,
-    n_files: int = 64,
-) -> DataFrame:
-    """Assign each row its Z-layout file id (0..n_files-1), equal-depth
-    by Z-rank.  Adds columns ``z`` and ``file``."""
-    from turtle_spark.operators.skew import pin, spread
-
-    # spread + pinned: the boundary sample, the bucket counts, the
-    # rank window and the row-count branch all read this subtree — and
-    # a one-file parquet source would otherwise pin (and serve all of
-    # them) from a single partition
-    zed = pin(spread(df.withColumn("z", z_value(F.col(a_col), F.col(b_col)))))
-    n = zed.select(F.count("*").alias("n"))
-    return (
-        exact_rank(zed, ["z", a_col, b_col], "_rn", pin_input=False)
-        .join(F.broadcast(n))
-        .withColumn(
-            "file", F.expr(f"CAST(_rn * {n_files} div n AS INT)")
-        )
-        .drop("_rn", "n")
-    )
-
-
 def pruning_report(
     df: DataFrame,
     a_col: str,

@@ -369,80 +369,3 @@ def link_terms(
         salt_cap_order=salt_cap_order,
     )
     return verify_pairs(pairs, terms, shingle_k=shingle_k, threshold=threshold)
-
-
-def link_terms_incremental(
-    old_terms: DataFrame,
-    old_bands: DataFrame,
-    new_terms: DataFrame,
-    num_perm: int = DEFAULT_NUM_PERM,
-    bands: int = DEFAULT_BANDS,
-    shingle_k: int = DEFAULT_SHINGLE_K,
-    bucket_cap: int = DEFAULT_BUCKET_CAP,
-    threshold: float = DEFAULT_JACCARD,
-    candidate_cap: int = 64,
-    seed: int = 7,
-) -> DataFrame:
-    """Incremental entity linking: verified similarity edges that
-    TOUCH a new-term batch, against a standing corpus represented by
-    its persisted band index — O(batch · fanout), never O(corpus).
-
-    ``old_bands`` is the (term_id, band_index, band_hash) artifact of
-    a prior ``lsh_band_keys`` run (persist it next to the canonical
-    tables; at 10^12 terms it is the index you cannot afford to
-    rebuild per batch).  The batch's bands are computed fresh
-    (O(batch)); candidates are within-batch pairs plus batch↔corpus
-    band-key joins, the cross side capped at ``candidate_cap``
-    partners per new term (deterministic smallest-id order — the same
-    boilerplate-bucket bound the novelty screen uses).  Verification
-    recomputes shingle profiles ONLY for the batch and the touched
-    old terms (semi-join pruned), so the exact-Jaccard stage is
-    O(delta) too.
-
-    Feed the result to ``cc.incremental_components`` and the
-    canonicalization pipeline absorbs a snapshot's new mentions
-    without re-running linking over the corpus.  With caps
-    non-binding the edge set equals the full ``link_terms`` run's
-    new-touching slice bit-for-bit (pinned by test).
-    """
-    from pyspark.sql import Window
-
-    from turtle_spark.operators.skew import pin
-
-    new_bands = pin(
-        lsh_band_keys(
-            new_terms, num_perm=num_perm, bands=bands, shingle_k=shingle_k, seed=seed
-        )
-    )
-    nn = candidate_pairs(new_bands, bucket_cap=bucket_cap)
-    cross_raw = (
-        new_bands.select("band_index", "band_hash", F.col("term_id").alias("_new"))
-        .join(
-            old_bands.select(
-                "band_index", "band_hash", F.col("term_id").alias("_old")
-            ),
-            ["band_index", "band_hash"],
-        )
-        .where(F.col("_new") != F.col("_old"))
-        .select("_new", "_old")
-        .distinct()
-    )
-    w = Window.partitionBy("_new").orderBy("_old")
-    cross = (
-        cross_raw.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= candidate_cap)
-        .select(
-            F.least("_new", "_old").alias("src"),
-            F.greatest("_new", "_old").alias("dst"),
-        )
-    )
-    pairs = nn.unionByName(cross).distinct()
-    touched_old = old_terms.join(
-        pairs.select(F.col("src").alias("term_id"))
-        .unionByName(pairs.select(F.col("dst").alias("term_id")))
-        .distinct(),
-        "term_id",
-        "left_semi",
-    )
-    verify_terms = new_terms.unionByName(touched_old)
-    return verify_pairs(pairs, verify_terms, shingle_k=shingle_k, threshold=threshold)

@@ -50,7 +50,7 @@ from turtle_spark.operators.similarity import (
     train_ivf_centroids,
 )
 
-__all__ = ["semantic_dedup", "semantic_pairs"]
+__all__ = ["semantic_dedup"]
 
 
 def _with_cluster_and_csim(
@@ -156,33 +156,6 @@ def _cluster_pairs(
         .withColumn("cosine", cosine)
         .where(F.col("cosine") >= threshold)
         .select("cluster", "id1", "id2", "cosine")
-    )
-
-
-def semantic_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.35,
-    n_clusters: int = 16,
-    cluster_cap: int = 4096,
-    seed: int = 13,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Within-cluster near-duplicate pairs:
-    (id1, id2, cosine, cluster) with id1 < id2, cosine >= threshold.
-
-    A pair split across two clusters is NOT examined — that is
-    SemDeDup's deliberate trade (the cross-cluster miss probability
-    falls as near-duplicates land in the same cell); callers who
-    need the global guarantee use ``dedup.embedding_near_duplicates``.
-    """
-    cents = train_ivf_centroids(
-        embeddings, n_centroids=n_clusters, seed=seed,
-        vec_col=vec_col, id_col=id_col,
-    )
-    assigned = _with_cluster_and_csim(embeddings, cents, id_col, vec_col)
-    return _cluster_pairs(assigned, threshold, cluster_cap, id_col, vec_col).select(
-        "id1", "id2", "cosine", "cluster"
     )
 
 

@@ -1,17 +1,10 @@
 """Sessionization over event streams.
 
-Two implementations with identical semantics:
-
-* ``sessionize`` — gap-based sessions via window functions (lag +
-  running sum of session-break flags).  SQL-expressible, so it carries
-  a DuckDB oracle; two shuffles (both on user_id — Catalyst reuses the
-  exchange for the consecutive windows).
-* ``sessionize_native`` — Spark's built-in ``session_window``
-  aggregation: one shuffle, merge-able partial state, the form that
-  also runs under Structured Streaming with a watermark.
-
-Both produce (user_id, session_start, session_end, n_events,
-total_value) and are asserted equal in tests.
+``sessionize`` builds gap-based sessions via window functions (lag +
+running sum of session-break flags).  It is SQL-expressible, so it
+carries a DuckDB oracle; two shuffles (both on user_id — Catalyst
+reuses the exchange for the consecutive windows).  It produces
+(user_id, session_start, session_end, n_events, value_range_sum).
 """
 
 from __future__ import annotations
@@ -48,27 +41,6 @@ def sessionize(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
             F.round(F.min("value") + F.max("value"), 6).alias("value_range_sum"),
         )
         .drop("session_no")
-    )
-
-
-def sessionize_native(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
-    """Built-in session_window aggregation (streaming-capable form).
-
-    ``session_window`` closes a session ``gap`` after the LAST event,
-    so its window end is ``max(ts) + gap``; normalized here to the
-    last-event timestamp to match ``sessionize`` exactly.
-    """
-    ts = F.col("ts").cast("timestamp")
-    return (
-        events.select("user_id", ts.alias("ts"), "value")
-        .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes").alias("w"))
-        .agg(
-            F.date_format(F.min("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
-            F.date_format(F.max("ts"), "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-            F.count("*").alias("n_events"),
-            F.round(F.min("value") + F.max("value"), 6).alias("value_range_sum"),
-        )
-        .drop("w")
     )
 
 

@@ -192,22 +192,3 @@ class StageManifest:
             stage, compute(), fingerprint, partition_by=partition_by, metrics=metrics
         )
         return df, False
-
-
-def dataframe_fingerprint(df: DataFrame, sample_cols: list[str] | None = None) -> str:
-    """Order-insensitive content fingerprint of a DataFrame.
-
-    count + sum(xxhash64(cols)) — cheap (one aggregate) and stable
-    across partitioning, which is exactly the resume contract.
-    """
-    from pyspark.sql import functions as F
-
-    cols = sample_cols or df.columns
-    row = df.select(
-        F.count("*").alias("n"),
-        # decimal(38,0) sum: overflow-proof under ANSI mode
-        F.sum(
-            F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)")
-        ).alias("h"),
-    ).collect()[0]
-    return f"{row['n']}:{row['h']}"

@@ -32,7 +32,7 @@ from turtle_spark.operators.canonicalize import (
 from turtle_spark.operators.cc import connected_components
 from turtle_spark.operators.extract import extract_triples, media_triples
 from turtle_spark.plans.manifest import StageManifest
-from turtle_spark.sources.storage import DEFAULT_BUCKETS, with_bucket
+from turtle_spark.sources.storage import DEFAULT_BUCKETS, bucketed
 
 
 @dataclass
@@ -177,18 +177,12 @@ def run_pipeline(
         lambda: dedup_triples(apply_canonical_map(triples, cmap)),
     )
 
-    # E: bucketed materialization.  Repartition on the bucket key
-    # before the partitioned write: without it every upstream task
-    # writes a file into every bucket directory (tasks x buckets small
-    # files — at 1000 executors x 64 buckets that is 64k files per
-    # commit, and footer-based lineage degrades past its cap), with it
-    # each bucket is exactly one writer's output.  The added exchange
-    # replaces the write-side fan-out and scales with the cluster.
+    # E: bucketed materialization, one file per bucket directory
+    # (``storage.bucketed``; many small files per bucket would also
+    # degrade footer-based lineage past its cap).
     final = stage(
         "materialize",
-        lambda: with_bucket(canonical, n_buckets).repartition(
-            n_buckets, "bucket"
-        ),
+        lambda: bucketed(canonical, n_buckets),
         partition_by=["bucket"],
     )
 

@@ -7,12 +7,11 @@ the guard), so this module implements the load-bearing parts of the
 Iceberg table spec — immutable data segments, snapshot manifests,
 an atomically-swapped current pointer, optimistic concurrency,
 time travel and incremental (CDC-style) reads — on the local
-filesystem, with the same bucketed layout ``storage.write_triples``
-uses.  Design follows the public Apache Iceberg spec (v2): a commit
-is (1) write data files, (2) write an exclusive snapshot manifest,
-(3) swap the pointer; a crash between any two steps leaves the prior
-snapshot fully readable and at worst an orphan data directory that
-``orphans()`` reports.
+filesystem.  Design follows the public Apache Iceberg spec (v2): a
+commit is (1) write data files, (2) write an exclusive snapshot
+manifest, (3) swap the pointer; a crash between any two steps leaves
+the prior snapshot fully readable and at worst an orphan data
+directory that ``orphans()`` reports.
 
 Layout::
 
@@ -39,10 +38,10 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import uuid
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class CommitConflictError(RuntimeError):
@@ -118,18 +117,9 @@ class SnapshotCatalog:
         list.  Returns the committed version."""
         if op not in ("append", "overwrite"):
             raise ValueError(f"op must be append|overwrite, got {op!r}")
-        import uuid
-
         parent = self.current_version()
         version = (parent or 0) + 1
-        # uuid suffix: two writers racing the same version write
-        # DISTINCT segment dirs; the loser's becomes an orphan —
-        # never a collision that blocks the winner (Iceberg names
-        # data files the same way)
-        seg = f"seg-{version:05d}-{op}-{uuid.uuid4().hex[:8]}"
-        seg_dir = self.root / "data" / seg
-        # step 1: data files (invisible until the snapshot publishes)
-        df.write.mode("error").parquet(str(seg_dir))
+        seg = self._write_segment(df, version, op)
         rows_written = self._segment_rows(df.sparkSession, [seg])
         if op == "overwrite" or parent is None:
             prev_segments, prev_rows = [], 0
@@ -144,7 +134,23 @@ class SnapshotCatalog:
             "rows": rows_written + prev_rows,
             "properties": dict(properties or {}),
         }
-        # step 2: exclusive snapshot manifest — the optimistic lock
+        return self._publish(spec)
+
+    def _write_segment(self, df: DataFrame, version: int, op: str) -> str:
+        """Step 1 of a commit: write ``df`` as a new segment directory,
+        invisible until a snapshot publishes it; returns its name.  The
+        uuid suffix makes two writers racing the same version write
+        DISTINCT segment dirs; the loser's becomes an orphan — never a
+        collision that blocks the winner (Iceberg names data files the
+        same way)."""
+        seg = f"seg-{version:05d}-{op}-{uuid.uuid4().hex[:8]}"
+        df.write.mode("error").parquet(str(self.root / "data" / seg))
+        return seg
+
+    def _publish(self, spec: dict) -> int:
+        """Steps 2 and 3 of a commit: create the snapshot manifest with
+        O_EXCL (the optimistic lock), then swap the pointer to it."""
+        version = spec["version"]
         try:
             fd = os.open(self._snap_path(version), os.O_WRONLY | os.O_CREAT | os.O_EXCL)
         except FileExistsError as exc:
@@ -153,11 +159,15 @@ class SnapshotCatalog:
             ) from exc
         with os.fdopen(fd, "w") as f:
             json.dump(spec, f)
-        # step 3: atomic pointer swap
+        self._set_current(version)
+        return version
+
+    def _set_current(self, version: int) -> None:
+        """Atomic pointer swap: readers see the old or the new CURRENT,
+        never a partial write."""
         tmp = self.root / "metadata" / ".CURRENT.tmp"
         tmp.write_text(str(version))
         os.replace(tmp, self.root / "metadata" / "CURRENT")
-        return version
 
     def _segment_rows(self, spark: SparkSession, segments: list[str]) -> int:
         if not segments:
@@ -210,8 +220,6 @@ class SnapshotCatalog:
         and the rewritten table is byte-identical row-wise.  Publishes
         an ``op='compact'`` snapshot; ``incremental`` refuses to scan
         across it, exactly like an overwrite."""
-        import uuid
-
         parent = self.current_version()
         if parent is None:
             raise FileNotFoundError(f"nothing to compact in {self.root}")
@@ -220,8 +228,7 @@ class SnapshotCatalog:
         if target_partitions:
             df = df.repartition(target_partitions)
         version = parent + 1
-        seg = f"seg-{version:05d}-compact-{uuid.uuid4().hex[:8]}"
-        df.write.mode("error").parquet(str(self.root / "data" / seg))
+        seg = self._write_segment(df, version, "compact")
         spec = {
             "version": version,
             "op": "compact",
@@ -230,18 +237,7 @@ class SnapshotCatalog:
             "rows": cur.rows,
             "properties": {"compacted_segments": len(cur.segments)},
         }
-        try:
-            fd = os.open(self._snap_path(version), os.O_WRONLY | os.O_CREAT | os.O_EXCL)
-        except FileExistsError as exc:
-            raise CommitConflictError(
-                f"snapshot {version} already committed by another writer"
-            ) from exc
-        with os.fdopen(fd, "w") as f:
-            json.dump(spec, f)
-        tmp = self.root / "metadata" / ".CURRENT.tmp"
-        tmp.write_text(str(version))
-        os.replace(tmp, self.root / "metadata" / "CURRENT")
-        return version
+        return self._publish(spec)
 
     def rollback(self, version: int) -> None:
         """Point CURRENT back at an earlier snapshot (its manifest
@@ -249,9 +245,7 @@ class SnapshotCatalog:
         until expired."""
         if not self._snap_path(version).exists():
             raise FileNotFoundError(f"no snapshot {version}")
-        tmp = self.root / "metadata" / ".CURRENT.tmp"
-        tmp.write_text(str(version))
-        os.replace(tmp, self.root / "metadata" / "CURRENT")
+        self._set_current(version)
 
     def expire_snapshots(self, keep_last: int = 2) -> dict:
         """Retention (Iceberg ``expire_snapshots`` parity): keep the
@@ -324,25 +318,6 @@ class SnapshotCatalog:
             referenced.update(json.loads(p.read_text())["segments"])
         on_disk = {p.name for p in (self.root / "data").iterdir() if p.is_dir()}
         return sorted(on_disk - referenced)
-
-
-def read_subject_at(
-    catalog: SnapshotCatalog,
-    spark: SparkSession,
-    subject: str,
-    version: int | None = None,
-    n_buckets: int = 64,
-) -> DataFrame:
-    """Subject-centric time-travel read: when segments carry the
-    ``bucket`` partition column (``storage.with_bucket`` layout), the
-    bucket equality predicate prunes every other partition directory
-    from the scan of every segment."""
-    df = catalog.read(spark, version)
-    if "bucket" in df.columns:
-        df = df.where(
-            F.col("bucket") == F.pmod(F.xxhash64(F.lit(subject)), F.lit(n_buckets))
-        )
-    return df.where(F.col("subject") == subject)
 
 
 def merge_upsert(

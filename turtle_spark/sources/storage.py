@@ -61,15 +61,27 @@ def with_bucket(triples: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFra
     )
 
 
+def bucketed(triples: DataFrame, n_buckets: int = DEFAULT_BUCKETS) -> DataFrame:
+    """``with_bucket`` plus a repartition on the bucket key, the input
+    a ``partitionBy("bucket")`` write wants.  Without the repartition
+    every upstream task writes a file into every bucket directory
+    (tasks x buckets small files — at 1000 executors x 64 buckets that
+    is 64k files per commit); with it each bucket is exactly one
+    writer's output.  The added exchange replaces the write-side
+    fan-out and scales with the cluster."""
+    return with_bucket(triples, n_buckets).repartition(n_buckets, "bucket")
+
+
 def write_triples(
     triples: DataFrame,
     path: str,
     n_buckets: int = DEFAULT_BUCKETS,
     mode: str = "overwrite",
 ) -> None:
-    """Materialize bucketed triple table (parquet layout)."""
+    """Materialize bucketed triple table (parquet layout, one data file
+    per bucket directory)."""
     (
-        with_bucket(triples, n_buckets)
+        bucketed(triples, n_buckets)
         .write.mode(mode)
         .partitionBy("bucket")
         .parquet(path)
@@ -149,33 +161,3 @@ def read_subject(spark: SparkSession, path: str, subject: str, n_buckets: int = 
         (F.col("bucket") == F.pmod(F.xxhash64(F.lit(subject)), F.lit(n_buckets)))
         & (F.col("subject") == subject)
     )
-
-
-def write_triples_table(
-    triples: DataFrame,
-    table: str,
-    path: str | None = None,
-    n_buckets: int = DEFAULT_BUCKETS,
-) -> None:
-    """Spark-native BUCKETED table: ``bucketBy(n, subject)`` +
-    ``sortBy(subject)`` + ``saveAsTable``.
-
-    This is the co-location form of the subject-hash layout: a join or
-    aggregation keyed on ``subject`` over two reads of this table (or a
-    self-join) is planned with ZERO Exchange — each task joins bucket i
-    against bucket i in place, which at 10^12 triples removes the
-    biggest shuffle a KG traversal pays.  The directory-``partitionBy``
-    fallback above gives pruning but NOT co-location (Spark only
-    trusts bucket metadata recorded in the catalog); Iceberg's hidden
-    ``bucket(N, subject)`` partitioning gives both.  Requires a
-    catalog (Spark's default in-memory/derby one works); ``path``
-    makes the table external.
-    """
-    w = (
-        triples.write.mode("overwrite")
-        .bucketBy(n_buckets, "subject")
-        .sortBy("subject")
-    )
-    if path:
-        w = w.option("path", path)
-    w.format("parquet").saveAsTable(table)

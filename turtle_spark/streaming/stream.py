@@ -1,74 +1,19 @@
-"""Structured Streaming surfaces.
+"""Event-time operators that run on streaming and batch DataFrames.
 
-The reference is a batch parser and the KG pipeline is batch-manifest
-based (SURVEY.md §2.2), but a production corpus *arrives* continuously,
-so the engine exposes streaming equivalents of its two ingestion-side
-operators:
+Both functions here carry watermarks, so the same code runs under
+Structured Streaming and, where watermarks are no-ops, on static
+data; the query registry runs them in batch against DuckDB oracles.
 
-* ``stream_docs`` + ``stream_extract_triples`` — a file-watch stream of
-  docs parquet that runs the SAME Arrow-batched extraction per
-  micro-batch via ``foreachBatch`` (the parse operator is stateless per
-  document, so batch and streaming share one implementation — no
-  semantic drift between the two paths);
 * ``windowed_event_counts`` — watermarked tumbling-window aggregation
-  over an event stream (late data handled by the watermark).
-
-Tests run with ``trigger(availableNow=True)`` against static parquet —
-the same code path a live stream takes.
+  over an event stream (late data handled by the watermark);
+* ``stream_interval_join`` — a stream-stream interval join whose
+  time-bounded condition lets Spark purge join state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from turtle_spark.operators.extract import extract_triples
-from turtle_spark.sources.corpus import DOCS_SCHEMA
-
-
-def stream_docs(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """File-watch stream over a docs-table directory (parquet)."""
-    reader = spark.readStream.schema(DOCS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def stream_extract_triples(
-    docs_stream: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-):
-    """Continuously extract triples from arriving documents.
-
-    ``foreachBatch`` reuses the batch extraction operator verbatim.
-    Delivery: ``foreachBatch`` alone is AT-LEAST-ONCE (a failed or
-    replayed micro-batch reruns with the SAME batch_id), so the sink is
-    made idempotent per batch_id — output is partitioned by
-    ``batch_id`` and written with dynamic partition overwrite, so a
-    replay replaces exactly its own partition instead of appending
-    duplicates.  Idempotent sink + replayable source + checkpoint =
-    effectively exactly-once results.  Returns the started query.
-    """
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            extract_triples(batch_df)
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(output_path)
-        )
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_event_counts(
@@ -101,73 +46,6 @@ def windowed_event_counts(
             "max_value",
         )
     )
-
-
-def stream_windowed_counts(
-    events_stream: DataFrame,
-    output_path: str,
-    checkpoint_path: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    available_now: bool = False,
-):
-    """Streaming windowed aggregation to a parquet sink (append mode
-    emits only watermark-finalized windows)."""
-    agg = windowed_event_counts(events_stream, window=window, watermark=watermark)
-    writer = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_dedup(
-    stream: DataFrame,
-    key_cols: list[str],
-    ts_col: str | None = None,
-    watermark: str = "24 hours",
-) -> DataFrame:
-    """Streaming exact dedup — tier 1 of the dedup family for a
-    continuously-arriving corpus.
-
-    With ``ts_col``: ``dropDuplicatesWithinWatermark`` keyed on
-    ``key_cols`` — state is BOUNDED by the watermark horizon, which is
-    the only shape that survives an unbounded 100 TB stream (a key's
-    fingerprint is held only until the watermark passes it).  Without
-    ``ts_col``: plain ``dropDuplicates`` — exact global dedup with
-    state that grows with distinct keys; acceptable for finite
-    backfills only, and documented as such.
-    """
-    if ts_col is None:
-        return stream.dropDuplicates(key_cols)
-    withts = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return withts.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(key_cols)
-
-
-def stream_dedup_to_parquet(
-    stream: DataFrame,
-    key_cols: list[str],
-    output_path: str,
-    checkpoint_path: str,
-    ts_col: str | None = None,
-    watermark: str = "24 hours",
-    available_now: bool = False,
-):
-    """Run ``stream_dedup`` into an append-only parquet sink."""
-    deduped = stream_dedup(stream, key_cols, ts_col=ts_col, watermark=watermark)
-    writer = (
-        deduped.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_interval_join(
@@ -220,113 +98,3 @@ def stream_interval_join(
             *[F.col(f"r.{c}").alias(c) for c in out_right],
         )
     )
-
-
-def stream_novelty_screen(
-    docs_stream: DataFrame,
-    index,
-    output_path: str,
-    checkpoint_path: str,
-    threshold: float = 0.5,
-    available_now: bool = False,
-    **screen_kwargs,
-):
-    """Continuously screen arriving documents against a corpus
-    NoveltyIndex (``operators.dedup.build_novelty_index``).
-
-    ``foreachBatch`` reuses the batch ``screen_against_index`` operator
-    verbatim per micro-batch — the screen is stateless given the index
-    (all dedup state lives in the index tables, not in streaming
-    state), so batch and stream cannot drift and streaming state stays
-    EMPTY no matter how long the stream runs.  The index side is a
-    static bucketed table at scale; each micro-batch joins against it
-    and writes (batch_id, doc_id, status, matched_id, jaccard) rows.
-
-    Delivery semantics: ``foreachBatch`` itself is AT-LEAST-ONCE — a
-    micro-batch that fails (or whose driver dies) after a partial or
-    even completed write is replayed with the SAME batch_id on
-    restart.  The sink is therefore made idempotent per batch_id:
-    output is partitioned by ``batch_id`` and written with dynamic
-    partition overwrite, so a replayed batch replaces exactly its own
-    partition instead of appending duplicate rows.  Idempotent sink +
-    replayable source + checkpoint = effectively exactly-once results.
-
-    The index is deliberately NOT updated intra-stream: cross-snapshot
-    dedup screens against the last committed snapshot (batch-refreshed
-    by the pipeline), which keeps results deterministic and
-    replay-safe — a self-updating index would make a doc's label
-    depend on micro-batch boundaries.
-    """
-    from turtle_spark.operators.dedup import screen_against_index
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        # pin_batch=False + local persist/unpersist: the operator's own
-        # pin() has no release hook, so letting it pin per trigger
-        # would leak one persisted DataFrame per micro-batch for the
-        # stream's lifetime.  Persisting the raw micro-batch here gives
-        # the same single-evaluation behavior and is released before
-        # the trigger completes.
-        batch_df.persist()
-        try:
-            out = screen_against_index(
-                batch_df, index, threshold=threshold, pin_batch=False,
-                **screen_kwargs,
-            ).withColumn("batch_id", F.lit(batch_id))
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch_id")
-                .parquet(output_path)
-            )
-        finally:
-            batch_df.unpersist()
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def stream_commit_snapshots(
-    stream_df: DataFrame,
-    table_dir: str,
-    checkpoint_path: str,
-    available_now: bool = False,
-    transform=None,
-):
-    """Stream micro-batches into the snapshot catalog
-    (sources/snapshots.py) — each trigger commits ONE append snapshot,
-    so readers get transactional visibility (a half-written batch is
-    never observable) and time travel across ingestion history.
-
-    Delivery: ``foreachBatch`` is AT-LEAST-ONCE; idempotency comes
-    from the catalog itself — every commit records its ``batch_id``
-    property, and a replayed micro-batch whose batch_id already
-    appears in the snapshot history is SKIPPED, not re-appended.
-    That is the catalog-transaction version of the dynamic-partition-
-    overwrite trick the parquet sinks here use.
-
-    ``transform``: optional batch_df -> DataFrame hook (e.g.
-    extraction) applied inside the batch before the commit.
-    """
-    from turtle_spark.sources.snapshots import SnapshotCatalog
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        cat = SnapshotCatalog(table_dir)
-        if any(
-            s.properties.get("batch_id") == batch_id for s in cat.history()
-        ):
-            return  # replayed batch: already committed
-        out = transform(batch_df) if transform is not None else batch_df
-        cat.commit(out, op="append", properties={"batch_id": batch_id})
-
-    writer = (
-        stream_df.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
