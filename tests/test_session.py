@@ -1,4 +1,5 @@
-"""SparkSession sizing: the driver heap default fits the host."""
+"""SparkSession conf: the driver heap default fits the host, and the
+Python workers start from the package daemon over a Unix socket."""
 
 from __future__ import annotations
 
@@ -82,3 +83,19 @@ def test_local_session_skips_parallel_listing(monkeypatch):
     monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
     conf = session.get_spark(cores=2)
     assert int(conf["spark.sql.sources.parallelPartitionDiscovery.threshold"]) >= 1024
+
+
+def test_workers_start_from_the_package_daemon_over_a_unix_socket(monkeypatch):
+    """Workers run ``turtle_spark.worker_daemon`` with the package on
+    their path, and reach the JVM over a Unix socket in a private
+    directory short enough for the daemon's 43-byte socket name."""
+    monkeypatch.setattr(session.SparkSession, "builder", _RecordingBuilder())
+    conf = session.get_spark(cores=2)
+    assert conf["spark.python.daemon.module"] == "turtle_spark.worker_daemon"
+    root = conf["spark.executorEnv.PYTHONPATH"]
+    assert os.path.isfile(os.path.join(root, "turtle_spark", "worker_daemon.py"))
+    assert conf["spark.python.unix.domain.socket.enabled"] == "true"
+    sock_dir = conf["spark.python.unix.domain.socket.dir"]
+    assert len(sock_dir) + 43 <= 107
+    assert os.stat(sock_dir).st_mode & 0o777 == 0o700
+    assert session.get_spark(cores=2)["spark.python.unix.domain.socket.dir"] == sock_dir

@@ -13,13 +13,41 @@ merely *parameterized* down for local test runs:
   ``local[N]``, so Spark's distributed listing of a directory tree
   (one job whenever a read sees more than 32 paths, which every read
   of a 64-bucket table root does) only adds a job to each read.
+* Python workers start from ``turtle_spark.worker_daemon``
+  (``spark.python.daemon.module``), with the package root on
+  ``spark.executorEnv.PYTHONPATH`` so the daemon imports whatever the
+  driver's working directory.  Spark puts ``pyspark.zip``, the py4j
+  zip and the spark-core jar at the front of the workers' ``sys.path``;
+  each task's ``importlib.invalidate_caches()`` then makes every
+  zipimporter over them re-read its archive (12 over ``pyspark.zip`` at
+  ~5.7 ms, 2 over the 5,359-entry jar at ~24 ms: ~115 ms per task on
+  Python 3.11).  The daemon drops those archives when the installed
+  pyspark is the same version.
+* workers reach the JVM over a Unix domain socket, which removes a
+  further ~40 ms per task that waits on the TCP loopback socket.  The
+  socket directory is a private one under ``/tmp`` (see
+  ``worker_socket_dir``), never ``java.io.tmpdir``: a socket path must
+  fit in 107 bytes, so a long temp path would fail every Python task.
+  Together the two took the per-task gap of a trivial ``mapInArrow``
+  task over a JVM-only task at ``local[1]`` from ~128 ms to 6-10 ms on a
+  4-core host (``tools/task_overhead_probe.py``).
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import pathlib
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+from turtle_spark import worker_daemon
+
+#: the directory that holds the ``turtle_spark`` package, for the workers
+PACKAGE_ROOT = str(pathlib.Path(__file__).resolve().parent.parent)
 
 #: driver heap ceiling; the size the extraction stage was tuned at on
 #: local[32], where 8g measured a 5x GC slowdown
@@ -38,6 +66,18 @@ def default_driver_memory() -> str:
     past RAM gets the JVM OOM-killed mid-run instead of spilling."""
     half_gb = mem_total_bytes() // (2 * 1024**3)
     return f"{min(max(1, half_gb), MAX_DRIVER_MEM_GB)}g"
+
+
+@functools.cache
+def worker_socket_dir() -> str:
+    """A short private directory for the JVM<->worker Unix sockets,
+    made once per process (mode 0700) and removed at exit.  It sits
+    under ``/tmp`` itself, not ``java.io.tmpdir`` or ``$TMPDIR``: a
+    socket path must fit in 107 bytes and the daemon's socket name
+    takes 43 of them, so a long temp path fails every Python task."""
+    path = tempfile.mkdtemp(prefix="ts-", dir="/tmp")
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
 
 
 def get_spark(
@@ -93,6 +133,13 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
+        # workers import pyspark from the installed package, not from
+        # $SPARK_HOME's archives (see turtle_spark.worker_daemon) ...
+        .config("spark.python.daemon.module", worker_daemon.__name__)
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
+        # ... and talk to the JVM over a Unix socket, not TCP loopback
+        .config("spark.python.unix.domain.socket.enabled", "true")
+        .config("spark.python.unix.domain.socket.dir", worker_socket_dir())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

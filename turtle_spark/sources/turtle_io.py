@@ -9,10 +9,9 @@ distributed:
   ``spark.read.text(wholetext=True)`` and parse through the standard
   extraction operator, so a directory of millions of documents
   partitions across the cluster.
-* ``write_turtle``: subject blocks render distributed (one
-  ``mapInArrow`` pass per partition) and write as text part-files; the
-  pragma header goes into ``_header.ttl``.  ``write_turtle_single``
-  collects into one canonical sorted document for small graphs.
+* ``write_turtle_single``: collects into one canonical sorted
+  document for small graphs.  A distributed export renders subject
+  blocks with ``operators.serialize.subject_blocks``.
 """
 
 from __future__ import annotations
@@ -20,9 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from turtle_spark.core.serializer import pragma_lines
 from turtle_spark.operators.extract import extract_triples
-from turtle_spark.operators.serialize import subject_blocks, turtle_text
+from turtle_spark.operators.serialize import turtle_text
 
 
 def read_turtle(
@@ -48,29 +46,6 @@ def read_turtle(
         ).alias("spans"),
     )
     return extract_triples(raw, base=base, prefixes=prefixes)
-
-
-def write_turtle(
-    triples: DataFrame,
-    path: str,
-    base: str = "",
-    prefixes: dict[str, str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Distributed Turtle sink: sorted subject blocks as text part-files."""
-    blocks = subject_blocks(triples, base=base, prefixes=prefixes)
-    (
-        blocks.orderBy("subject")
-        .select("block")
-        .write.mode(mode)
-        .text(path)
-    )
-    header = pragma_lines(base, prefixes)
-    if header:
-        spark = triples.sparkSession
-        spark.createDataFrame([(h,) for h in header], "value string").coalesce(
-            1
-        ).write.mode("append").text(path + "/_header")
 
 
 def write_turtle_single(
