@@ -1,10 +1,10 @@
 """Fixed cost of one Python task, against a JVM-only task.
 
-Times N trivial tasks of three kinds on a ``local[1]`` session from
-``get_spark``, each as the median of a few repetitions after one warm-up:
+Times ``TASKS`` trivial tasks of three kinds on a ``local[1]`` session from
+``get_spark``, each as the median of ``REPS`` repetitions after one warm-up:
 
-* JVM-only: ``range`` with N partitions into the ``noop`` sink;
-* RDD: ``parallelize(range(N), N).mapPartitions(identity).count()``;
+* JVM-only: ``range`` with ``TASKS`` partitions into the ``noop`` sink;
+* RDD: ``parallelize(range(TASKS), TASKS).mapPartitions(identity).count()``;
 * ``mapInArrow``: the same ``range`` through an identity ``mapInArrow``
   into the ``noop`` sink.
 
@@ -15,12 +15,11 @@ worker's ``sys.path_importer_cache``: a worker that imports pyspark from
 Spark's archives pays for re-reading them whenever a task calls
 ``importlib.invalidate_caches()``.
 
-Run: ``python tools/task_overhead_probe.py [--tasks 16] [--reps 5]``.
+Run: ``python tools/task_overhead_probe.py``.
 """
 
 from __future__ import annotations
 
-import argparse
 import pathlib
 import statistics
 import sys
@@ -28,6 +27,9 @@ import time
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
+
+TASKS = 16
+REPS = 5
 
 
 def _identity_batches(batches):
@@ -56,12 +58,6 @@ def _timed(fn, reps: int) -> float:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--tasks", type=int, default=16)
-    ap.add_argument("--reps", type=int, default=5)
-    args = ap.parse_args()
-    n = args.tasks
-
     from turtle_spark.session import get_spark
 
     spark = get_spark(
@@ -74,20 +70,23 @@ def main() -> None:
     sc = spark.sparkContext
     try:
         kinds = {
-            "jvm_only": lambda: spark.range(0, n, 1, n).write.format("noop").mode("overwrite").save(),
-            "rdd": lambda: sc.parallelize(range(n), n).mapPartitions(lambda it: it).count(),
-            "mapInArrow": lambda: spark.range(0, n, 1, n)
+            "jvm_only": lambda: spark.range(0, TASKS, 1, TASKS)
+            .write.format("noop")
+            .mode("overwrite")
+            .save(),
+            "rdd": lambda: sc.parallelize(range(TASKS), TASKS).mapPartitions(lambda it: it).count(),
+            "mapInArrow": lambda: spark.range(0, TASKS, 1, TASKS)
             .mapInArrow(_identity_batches, "id long")
             .write.format("noop")
             .mode("overwrite")
             .save(),
         }
-        walls = {kind: _timed(fn, args.reps) for kind, fn in kinds.items()}
-        print(f"local[1], {n} tasks per job, median of {args.reps} runs")
+        walls = {kind: _timed(fn, REPS) for kind, fn in kinds.items()}
+        print(f"local[1], {TASKS} tasks per job, median of {REPS} runs")
         for kind, wall in walls.items():
             line = f"  {kind:<11} {wall:6.3f} s"
             if kind != "jvm_only":
-                gap_ms = (wall - walls["jvm_only"]) / n * 1000
+                gap_ms = (wall - walls["jvm_only"]) / TASKS * 1000
                 line += f"   per-task gap over jvm_only: {gap_ms:6.1f} ms"
             print(line)
 

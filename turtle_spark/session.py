@@ -25,9 +25,10 @@ merely *parameterized* down for local test runs:
   pyspark is the same version.
 * workers reach the JVM over a Unix domain socket, which removes a
   further ~40 ms per task that waits on the TCP loopback socket.  The
-  socket directory is a private one under ``/tmp`` (see
-  ``worker_socket_dir``), never ``java.io.tmpdir``: a socket path must
-  fit in 107 bytes, so a long temp path would fail every Python task.
+  socket directory is a private one under ``/tmp``, never
+  ``java.io.tmpdir``: a socket path must fit in 107 bytes and the
+  daemon's socket name takes 43 of them, so a temp path longer than
+  about 32 characters would fail every Python task.
   Together the two took the per-task gap of a trivial ``mapInArrow``
   task over a JVM-only task at ``local[1]`` from ~128 ms to 6-10 ms on a
   4-core host (``tools/task_overhead_probe.py``).
@@ -70,11 +71,9 @@ def default_driver_memory() -> str:
 
 @functools.cache
 def worker_socket_dir() -> str:
-    """A short private directory for the JVM<->worker Unix sockets,
-    made once per process (mode 0700) and removed at exit.  It sits
-    under ``/tmp`` itself, not ``java.io.tmpdir`` or ``$TMPDIR``: a
-    socket path must fit in 107 bytes and the daemon's socket name
-    takes 43 of them, so a long temp path fails every Python task."""
+    """A private (0700) directory under ``/tmp`` for the JVM<->worker
+    Unix sockets, made once per process and removed at exit; not under
+    ``java.io.tmpdir`` (see the module docstring)."""
     path = tempfile.mkdtemp(prefix="ts-", dir="/tmp")
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
@@ -133,11 +132,8 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         .config("spark.ui.enabled", "false")
-        # workers import pyspark from the installed package, not from
-        # $SPARK_HOME's archives (see turtle_spark.worker_daemon) ...
         .config("spark.python.daemon.module", worker_daemon.__name__)
         .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
-        # ... and talk to the JVM over a Unix socket, not TCP loopback
         .config("spark.python.unix.domain.socket.enabled", "true")
         .config("spark.python.unix.domain.socket.dir", worker_socket_dir())
     )

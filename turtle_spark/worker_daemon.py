@@ -1,14 +1,11 @@
 """Python worker daemon that imports pyspark from the installed package.
 
-Spark starts its Python workers with ``$SPARK_HOME``'s ``pyspark.zip``,
-the py4j zip and the spark-core jar at the front of ``sys.path``, so the
-workers import pyspark from the zip.  Every task then calls
-``importlib.invalidate_caches()``, and on Python 3.11 that makes each
-zipimporter over those archives re-read its whole index: about 115 ms
-per task on a 4-core host.  ``get_spark`` names this module as
-``spark.python.daemon.module``.  It drops the archives from ``sys.path``
-when the rest of the path holds the same pyspark, then runs
-``pyspark.daemon`` as Spark would have.
+Spark puts its own archives first on the workers' ``sys.path``, and
+each task's ``importlib.invalidate_caches()`` makes every zipimporter
+over them re-read its index (measured in ``turtle_spark.session``).
+``get_spark`` names this module as ``spark.python.daemon.module``.  It
+drops the archives from ``sys.path`` when the rest of the path holds the
+same pyspark, then runs ``pyspark.daemon`` as Spark would have.
 
 Neither this module nor the package ``__init__`` may import pyspark:
 that import would come from the zip.
